@@ -107,13 +107,18 @@ def fix_times_segment(pts: list[Pt]) -> int:
     Mutates ``pts`` in place (the Go version returns the mutated segment).
     The initial min-time scan (time.go:34-38) is dead code — its result is
     overwritten at :45 — so it is not replicated.
+
+    Deviation: when ``pts[1]`` has the zero time, Go sets ``pts[0]`` to
+    zero time minus 10 s and would write ``0000-12-31T23:59:50Z``.  That
+    instant is below int64 epoch ns, so the subtraction saturates at
+    ``GO_ZERO_NS`` and ``pts[0]`` is written without a time.
     """
     num = 0
     if len(pts) < 2:
         return num
     # Check first element (time.go:40-43)
     if pts[0].t != GO_ZERO_NS and pts[0].t > pts[1].t:
-        pts[0].t = pts[1].t - 10 * 1_000_000_000
+        pts[0].t = max(pts[1].t - 10 * 1_000_000_000, GO_ZERO_NS)
         num += 1
     # Check all intermediate elements (time.go:45-57)
     last_valid = pts[0].t

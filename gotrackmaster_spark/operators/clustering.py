@@ -62,6 +62,7 @@ from pyspark.sql import functions as F
 
 from gotrackmaster_spark.caching import make_bounded_cache
 from gotrackmaster_spark.operators.graph import connected_components
+from gotrackmaster_spark.session import local_frame
 
 # pair-table cache slot with bounded lifetime (policy: caching.py)
 _bound_nbr_cache = make_bounded_cache()
@@ -310,7 +311,5 @@ def kmeans_quantized(
         ]
     final = pts.withColumn("cid", assign_col(cents))
     counts = final.groupBy("cid").agg(F.count("*").alias("n_points"))
-    cent_df = points.sparkSession.createDataFrame(
-        cents, "cid int, cx long, cy long"
-    )
+    cent_df = local_frame(points.sparkSession, cents, "cid int, cx long, cy long")
     return counts.join(cent_df, "cid").select("cid", "n_points", "cx", "cy")

@@ -71,7 +71,7 @@ def track_profiles(
     """Per-track profile: quality scores + classification + J1 summary."""
     lookup = synthetic_dem_lookup if use_dem else None
 
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fn(key, pdf):
         base = _to_segments(pdf)
 
         def cp():

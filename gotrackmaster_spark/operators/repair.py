@@ -50,9 +50,13 @@ def _pts_frame(key: tuple, pts: list[K.Pt], n_key: int) -> pd.DataFrame:
         "lat": [p.lat for p in pts],
         "lon": [p.lon for p in pts],
         "ele": [p.ele for p in pts],
-        # ts is µs display precision (truncated); ts_ns carries exact nanos.
+        # ts is µs display precision, truncated toward zero like
+        # schemas.ts_from_ns; ts_ns carries exact nanos.  Times outside the
+        # pandas range (1677-2262) have a null ts.
         "ts": pd.to_datetime(
-            [None if p.t == GO_ZERO_NS else p.t // 1000 for p in pts], unit="us"
+            [None if p.t == GO_ZERO_NS else -(-p.t // 1000) if p.t < 0 else p.t // 1000
+             for p in pts],
+            unit="us", errors="coerce",
         ),
         "ts_ns": [p.t for p in pts],
     }
@@ -79,7 +83,7 @@ def _defects_frame(key: tuple, defects: list[K.Defect], seg_no=None) -> pd.DataF
 
 
 def _seg_fix(df: DataFrame, run: Callable[[list[K.Pt]], list[K.Pt]]) -> DataFrame:
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fn(key, pdf):
         pts = run(_to_pts(pdf))
         return _pts_frame(key, pts, 3)
 
@@ -87,7 +91,7 @@ def _seg_fix(df: DataFrame, run: Callable[[list[K.Pt]], list[K.Pt]]) -> DataFram
 
 
 def _seg_detect(df: DataFrame, run: Callable[[list[K.Pt]], list[K.Defect]]) -> DataFrame:
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fn(key, pdf):
         return _defects_frame(key, run(_to_pts(pdf)))
 
     return df.groupBy(*_SEG_KEY).applyInPandas(fn, DEFECTS_SCHEMA)
@@ -225,7 +229,7 @@ def round_elevation(df: DataFrame) -> DataFrame:
 def move_segments_fix(df: DataFrame, min_points: int = 14) -> DataFrame:
     """N7 joinsegments — per-track kernel; renumbers seg_no after merges."""
 
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fn(key, pdf):
         segs: list[list[K.Pt]] = []
         for seg_no in sorted(pdf["seg_no"].unique()):
             segs.append(_to_pts(pdf[pdf["seg_no"] == seg_no]))
@@ -264,7 +268,7 @@ def douglas_peucker_keep(df: DataFrame, epsilon_deg: float) -> DataFrame:
     used by index-pinned audits like the `dp_simplify` driver query."""
     from gotrackmaster_spark.kernels.extra import douglas_peucker_mask
 
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fn(key, pdf):
         pdf = pdf.sort_values("pt_idx")
         keep = douglas_peucker_mask(
             pdf["lat"].to_numpy(), pdf["lon"].to_numpy(), epsilon_deg

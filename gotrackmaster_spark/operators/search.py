@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gotrackmaster_spark.session import local_frame
+
 BM25_QUANT = 10**6
 
 
@@ -257,7 +259,7 @@ def phrase_search(docs: DataFrame, phrases: list[str]) -> DataFrame:
         terms = ph.split()
         for off, t in enumerate(terms):
             rows.append((ph, t, off, len(terms)))
-    dic = spark.createDataFrame(rows, "phrase string, term string, off int, ph_len int")
+    dic = local_frame(spark, rows, "phrase string, term string, off int, ph_len int")
     cand = post.join(F.broadcast(dic), "term").select(
         "doc_id", "phrase", "ph_len",
         (F.col("pos") - F.col("off")).cast("long").alias("start"),

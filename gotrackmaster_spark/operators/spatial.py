@@ -47,6 +47,7 @@ from gotrackmaster_spark.functions.geodesy import (
     haversine_col,
     haversine_np,
 )
+from gotrackmaster_spark.session import local_frame
 
 
 # --------------------------------------------------------------- E2: PIP ---
@@ -756,8 +757,8 @@ def _rank_with_exact_fallback(
         return ranked.select(*cols)
 
     spark = q.sparkSession
-    short = spark.createDataFrame(
-        [(r[0], r[1]) for r in short_rows], f"{query_id} {qid_type}, bf_bound double"
+    short = local_frame(
+        spark, [(r[0], r[1]) for r in short_rows], f"{query_id} {qid_type}, bf_bound double"
     )
 
     # Exact fallback for under-covered queries (empty when level/ring are
@@ -3778,7 +3779,7 @@ def track_diameter(
     group_type = dict(points.dtypes)[group_col]
     schema = f"{group_col} {group_type}, diam_deg double, n_pts long, hull_pts long"
 
-    def kern(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def kern(key, pdf):
         xs = pdf[x_col].to_numpy(dtype=np.float64)
         ys = pdf[y_col].to_numpy(dtype=np.float64)
         d, h = _hull_diameter(xs, ys)

@@ -34,6 +34,8 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 
+from gotrackmaster_spark.session import local_frame
+
 
 def _scan_snapshot_files(
     snap_dir: str, partition_col: str | None, stats_cols: list[str] | None
@@ -484,7 +486,7 @@ class Catalog:
         cols = m.get("schema_cols") or list(types)
         if cols and all(c in types for c in cols):
             ddl = ", ".join(f"`{c}` {types[c]}" for c in cols)
-            return spark.createDataFrame([], schema=ddl)
+            return local_frame(spark, [], ddl)
         return None
 
     # -------------------------------------------------------------- read ---
@@ -936,9 +938,7 @@ class Catalog:
             return all_partitions
         from pyspark.sql import functions as F
 
-        done_df = spark.createDataFrame(
-            [(d,) for d in done], f"{partition_col}_done string"
-        )
+        done_df = local_frame(spark, [(d,) for d in done], f"{partition_col}_done string")
         return all_partitions.join(
             F.broadcast(done_df),
             all_partitions[partition_col].cast("string")

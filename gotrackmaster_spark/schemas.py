@@ -35,6 +35,18 @@ GO_ZERO_NS = -(1 << 63)
 GO_DUR_MAX = (1 << 63) - 1
 GO_DUR_MIN = -(1 << 63)
 
+
+def ts_from_ns(ts_ns):
+    """The ``ts`` column from a ``ts_ns`` column: epoch ns truncated to µs
+    (``ts_ns div 1000``), null for ``GO_ZERO_NS``.  Every GPX ingest path
+    derives ``ts`` with this one expression."""
+    from pyspark.sql import functions as F
+
+    return F.when(
+        ts_ns != GO_ZERO_NS, F.timestamp_micros(F.call_function("div", ts_ns, F.lit(1000)))
+    )
+
+
 POINTS_SCHEMA = StructType(
     [
         StructField("track_id", StringType(), False),

@@ -11,7 +11,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def get_session(
@@ -70,3 +71,26 @@ def _ship_package(spark: SparkSession) -> None:
                 rel = os.path.relpath(full, os.path.dirname(pkg_dir))
                 zf.write(full, rel)
     spark.sparkContext.addPyFile(zip_path)
+
+
+def local_frame(spark: SparkSession, rows, schema: StructType | str) -> DataFrame:
+    """A DataFrame over driver-side row tuples, built from Arrow columns.
+
+    ``spark.createDataFrame(<list>)`` pickles the rows into a ``PythonRDD``,
+    so every scan of the frame runs Python-worker tasks (each costs a few
+    tenths of a second, even for one row).  An Arrow table is handed to the
+    JVM whole and becomes a ``LocalRelation``, whose scans run no Python.
+    ``schema`` is a ``StructType`` or a DDL string; struct values may be
+    tuples, and naive datetimes are read as UTC.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if not isinstance(schema, StructType):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)], schema=arrow_schema
+    )
+    return spark.createDataFrame(table, schema)

@@ -18,7 +18,8 @@ import datetime as _dt
 import xml.etree.ElementTree as ET
 from dataclasses import dataclass, field
 
-from gotrackmaster_spark.schemas import GO_ZERO_NS
+from gotrackmaster_spark.schemas import GO_ZERO_NS, ts_from_ns
+from gotrackmaster_spark.session import local_frame
 
 _NS = "{http://www.topografix.com/GPX/1/1}"
 
@@ -100,32 +101,20 @@ def _parse_gpx_tree(root, parsed: ParsedTrack) -> None:
 
 
 def track_to_rows(parsed: ParsedTrack) -> list[tuple]:
-    """Flatten to POINTS_SCHEMA rows: (track_id, trk_no, seg_no, pt_idx,
-    lat, lon, ele, ts, ts_ns)."""
-    rows = []
-    for trk_no, segs in enumerate(parsed.tracks):
-        for seg_no, pts in enumerate(segs):
-            for pt_idx, (lat, lon, ele, ts_ns) in enumerate(pts):
-                if ts_ns == GO_ZERO_NS:
-                    ts = None
-                else:
-                    ts = _dt.datetime.fromtimestamp(ts_ns / 1e9, tz=_dt.timezone.utc).replace(tzinfo=None)
-                rows.append(
-                    (parsed.track_id, trk_no, seg_no, pt_idx, lat, lon, ele, ts, ts_ns)
-                )
-    return rows
+    """Flatten to POINTS_SCHEMA rows without ``ts``: (track_id, trk_no,
+    seg_no, pt_idx, lat, lon, ele, ts_ns)."""
+    return [
+        (parsed.track_id, trk_no, seg_no, pt_idx, lat, lon, ele, ts_ns)
+        for trk_no, segs in enumerate(parsed.tracks)
+        for seg_no, pts in enumerate(segs)
+        for pt_idx, (lat, lon, ele, ts_ns) in enumerate(pts)
+    ]
 
 
 def waypoint_rows(parsed: ParsedTrack) -> list[tuple]:
-    """Flatten waypoints to WAYPOINTS_SCHEMA rows."""
-    rows = []
-    for i, (lat, lon, ele, ts_ns, name, link) in enumerate(parsed.waypoints):
-        if ts_ns == GO_ZERO_NS:
-            ts = None
-        else:
-            ts = _dt.datetime.fromtimestamp(ts_ns / 1e9, tz=_dt.timezone.utc).replace(tzinfo=None)
-        rows.append((parsed.track_id, i, lat, lon, ele, ts, ts_ns, name, link))
-    return rows
+    """Flatten waypoints to WAYPOINTS_SCHEMA rows without ``ts``:
+    (track_id, wpt_idx, lat, lon, ele, ts_ns, name, link_href)."""
+    return [(parsed.track_id, i, *w) for i, w in enumerate(parsed.waypoints)]
 
 
 def gpx_files_to_points_df(spark, paths: list[str]):
@@ -134,10 +123,24 @@ def gpx_files_to_points_df(spark, paths: list[str]):
     return points, tracks
 
 
+def _frame_with_ts(spark, rows: list[tuple], schema):
+    """``local_frame`` over rows that lack ``ts``, with ``ts`` derived from
+    ``ts_ns`` by the executor scan's own expression (``ts_from_ns``)."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import StructType
+
+    raw = local_frame(spark, rows, StructType([f for f in schema if f.name != "ts"]))
+    return raw.select(
+        *(ts_from_ns(F.col("ts_ns")).alias("ts") if n == "ts" else n for n in schema.names)
+    )
+
+
 def gpx_files_to_tables(spark, paths: list[str]):
     """Full ETL: (points, tracks, waypoints) DataFrames — waypoints ride a
     separate table so repair pipelines over points can't lose them (Wpt[]
-    passthrough, reference model tree via go-gpx)."""
+    passthrough, reference model tree via go-gpx).  The tables are Arrow-
+    built local frames (``session.local_frame``): scanning them runs no
+    Python-worker task."""
     from gotrackmaster_spark.schemas import (
         POINTS_SCHEMA,
         TRACKS_SCHEMA,
@@ -152,9 +155,9 @@ def gpx_files_to_tables(spark, paths: list[str]):
         rows.extend(track_to_rows(parsed))
         creators.append((parsed.track_id, parsed.creator, p, rank))
         wrows.extend(waypoint_rows(parsed))
-    points = spark.createDataFrame(rows, POINTS_SCHEMA)
-    tracks = spark.createDataFrame(creators, TRACKS_SCHEMA)
-    waypoints = spark.createDataFrame(wrows, WAYPOINTS_SCHEMA)
+    points = _frame_with_ts(spark, rows, POINTS_SCHEMA)
+    tracks = local_frame(spark, creators, TRACKS_SCHEMA)
+    waypoints = _frame_with_ts(spark, wrows, WAYPOINTS_SCHEMA)
     return points, tracks, waypoints
 
 
@@ -284,7 +287,7 @@ def write_gpx_files(points_df, tracks_df, out_dir: str, waypoints_df=None) -> in
         )
         unioned = unioned.unionByName(w)
 
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fn(key, pdf):
         import types
 
         cr = pdf["creator"].dropna()
@@ -429,12 +432,12 @@ def gpx_scan_distributed(spark, root_dir: str, with_errors: bool = False):
                 _parse_gpx_tree(root, parsed)
                 pts = [
                     {"trk_no": r[1], "seg_no": r[2], "pt_idx": r[3],
-                     "lat": r[4], "lon": r[5], "ele": r[6], "ts_ns": r[8]}
+                     "lat": r[4], "lon": r[5], "ele": r[6], "ts_ns": r[7]}
                     for r in track_to_rows(parsed)
                 ]
                 wps = [
                     {"wpt_idx": r[1], "lat": r[2], "lon": r[3], "ele": r[4],
-                     "ts_ns": r[6], "name": r[7], "link_href": r[8]}
+                     "ts_ns": r[5], "name": r[6], "link_href": r[7]}
                     for r in waypoint_rows(parsed)
                 ]
                 out["track_id"].append(tid)
@@ -461,13 +464,9 @@ def scan_points(scan_df):
     from pyspark.sql import functions as F
 
     p = scan_df.select("track_id", F.explode("points").alias("p"))
-    ts = F.when(
-        F.col("p.ts_ns") != GO_ZERO_NS,
-        F.timestamp_micros(F.expr("p.ts_ns div 1000")),
-    )
     return p.select(
         "track_id", "p.trk_no", "p.seg_no", "p.pt_idx",
-        "p.lat", "p.lon", "p.ele", ts.alias("ts"), "p.ts_ns",
+        "p.lat", "p.lon", "p.ele", ts_from_ns(F.col("p.ts_ns")).alias("ts"), "p.ts_ns",
     )
 
 
@@ -510,11 +509,7 @@ def scan_waypoints(scan_df):
     from pyspark.sql import functions as F
 
     wdf = scan_df.select("track_id", F.explode("waypoints").alias("w"))
-    ts = F.when(
-        F.col("w.ts_ns") != GO_ZERO_NS,
-        F.timestamp_micros(F.expr("w.ts_ns div 1000")),
-    )
     return wdf.select(
         "track_id", "w.wpt_idx", "w.lat", "w.lon", "w.ele",
-        ts.alias("ts"), "w.ts_ns", "w.name", "w.link_href",
+        ts_from_ns(F.col("w.ts_ns")).alias("ts"), "w.ts_ns", "w.name", "w.link_href",
     )
