@@ -185,10 +185,6 @@ FROM tagged GROUP BY tile
 """
 
 
-# decoded-stats cache slot with bounded lifetime (policy: caching.py)
-_bound_zonal_cache = make_bounded_cache()
-
-
 def q_zonal_image_stats(spark, sf_dir):
     """E2×E7 — zonal statistics over the IMAGE PAYLOAD: geotagged images
     PIP-joined against the polygon layer, per-polygon pixel/caption
@@ -206,11 +202,6 @@ def q_zonal_image_stats(spark, sf_dir):
         "image_id", "pixel_sum", "caption_len",
         g_lat.alias("lat"), g_lon.alias("lon"),
     )
-    # the PIP union (full-cell branch + boundary-refine branch) references
-    # the points subtree twice — cache the DECODED-stats rows (24 B/row,
-    # payload bytes already dropped) so the decode chain runs once, with
-    # the same bounded-lifetime policy as dedup/images (evict on next call)
-    pts = _bound_zonal_cache(pts)
     hits = point_in_polygon_join(pts, rect_polygons(spark, sf_dir), level=7)
     return hits.groupBy("poly_id").agg(
         F.count("*").alias("n_images"),
@@ -2238,7 +2229,6 @@ __all__ = [
     "SQL_IMAGE_STATS",
     "q_image_tiles",
     "SQL_IMAGE_TILES",
-    "_bound_zonal_cache",
     "q_zonal_image_stats",
     "SQL_ZONAL_IMAGE_STATS",
     "_PH_EVERY",

@@ -410,7 +410,7 @@ def q_pip_antijoin(spark, sf_dir):
     polys = rect_polygons(spark, sf_dir)
     # level 9, not 7: the verdict is exact at ANY level, but finer cells
     # classify far more of the covering as `full`/absent, so most points
-    # take the pure-codegen path instead of the Arrow ray-cast refine
+    # pass on the `full` flag instead of running the ray-cast fold
     # (measured 2.16 s -> 1.34 s at sf0.1; level 11 regresses — covering
     # generation is O(4^level) per polygon bbox)
     out = point_in_polygon_anti(pts, polys, level=9)

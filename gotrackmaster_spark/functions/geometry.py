@@ -1,6 +1,7 @@
-"""Row-local vector geometry over polygon ring arrays — shoelace area
-and area-weighted centroid, entirely in Catalyst higher-order functions
-(``zip_with`` + ``aggregate``): no explode, no window, no shuffle.
+"""Row-local vector geometry over polygon ring arrays — shoelace area,
+area-weighted centroid and the even-odd point-in-ring test, entirely in
+Catalyst higher-order functions (``zip_with`` + ``aggregate``): no
+explode, no window, no shuffle, no Python worker.
 
 The ring is an ``array<struct<lat,lon>>`` (the same shape the PIP join
 consumes, SURVEY §2.10 E2), vertices in order, NOT closed (the wrap edge
@@ -36,6 +37,29 @@ def ring_shoelace_area(ring: Column) -> Column:
     """Signed shoelace area of the ring: Σ(x·y' − x'·y) / 2."""
     cross = _edge_terms(ring, lambda a, b: a["lon"] * b["lat"] - b["lon"] * a["lat"])
     return _fold_sum(cross) / 2.0
+
+
+def ray_cast_col(ring: Column, lat: Column, lon: Column) -> Column:
+    """Even-odd ray cast (ray toward +lon) of the point ``(lat, lon)``
+    against ``ring`` — the Catalyst twin of ``operators.spatial._ray_cast_np``
+    with the same operands per edge (vertex ``i``, predecessor ``j``):
+
+      cond  = (y_i > lat) != (y_j > lat)
+      x_int = (x_j - x_i) * (lat - y_i) / (y_j - y_i) + x_i
+      hit   = cond AND lon < x_int
+
+    XOR-folded over the edges.  Two guards keep it bit-identical to numpy:
+    the division runs only under ``cond`` (which implies ``y_j != y_i``;
+    ANSI mode raises on a zero divisor), and a NaN ``x_int`` is never
+    "right of" the point (Spark orders NaN above every double)."""
+
+    def hit(a, b):  # a = predecessor j, b = vertex i
+        cond = (b["lat"] > lat) != (a["lat"] > lat)
+        x_int = (a["lon"] - b["lon"]) * (lat - b["lat"]) / (a["lat"] - b["lat"]) + b["lon"]
+        # nanvl: a NaN x_int compares as lon < lon, i.e. False as in numpy
+        return F.when(cond, lon < F.nanvl(x_int, lon)).otherwise(F.lit(False))
+
+    return F.aggregate(_edge_terms(ring, hit), F.lit(False), lambda acc, h: acc != h)
 
 
 def ring_centroid(ring: Column) -> tuple[Column, Column]:

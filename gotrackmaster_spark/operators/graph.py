@@ -460,7 +460,7 @@ def bfs_hops(
                 .withColumn("hops", F.lit(r).cast("long"))
             )
             nxt = snap(nxt)
-            if nxt.rdd.isEmpty():
+            if nxt.isEmpty():
                 exhausted = True
                 break
             visited = snap(visited.unionByName(nxt))
@@ -568,7 +568,7 @@ def sssp_weighted(
             )
             frontier = merged.filter(F.col("__improved")).select("v", "dist")
             dist = merged.select("v", "dist")
-            if frontier.rdd.isEmpty():
+            if frontier.isEmpty():
                 converged = True
                 break
     if not converged:

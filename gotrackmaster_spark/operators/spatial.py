@@ -6,7 +6,8 @@ Design notes (SURVEY.md §2.10, §4.2):
 * All joins are **cell-bucketed equi-joins** on the hierarchical Z-order cell
   IDs from ``functions.cells`` — candidate generation is a broadcast or
   shuffle hash join on ``cell``; exact geometry refinement happens after, on
-  the (much smaller) candidate set, in vectorized numpy.
+  the (much smaller) candidate set — a Catalyst ray cast for PIP, vectorized
+  numpy for the rest.
 * The covering / k-ring sides are *small* relative to the points side
   (polygon layers, query sets, per-track summaries), so they are
   ``broadcast()`` explicitly; the points side is never shuffled for these
@@ -47,6 +48,7 @@ from gotrackmaster_spark.functions.geodesy import (
     haversine_col,
     haversine_np,
 )
+from gotrackmaster_spark.functions.geometry import ray_cast_col
 from gotrackmaster_spark.session import local_frame
 
 
@@ -213,7 +215,9 @@ def _ray_cast_np(lat: np.ndarray, lon: np.ndarray, ring_lats, ring_lons) -> np.n
     """Even-odd ray casting (ray toward +lon).  Vectorized over points for
     ONE ring.  Half-open edge rule ``(lat_i > y) != (lat_j > y)`` — the same
     comparator family as the reference's orientation tests
-    (distance.go:293-309): strict >, exact float64 arithmetic.
+    (distance.go:293-309): strict >, exact float64 arithmetic.  The
+    covering's corner test; ``functions.geometry.ray_cast_col`` is its
+    bit-identical Catalyst twin for the joins.
     """
     inside = np.zeros(len(lat), dtype=bool)
     n = len(ring_lats)
@@ -241,12 +245,15 @@ def point_in_polygon_join(
 
     points must carry a unique id column set + lat/lon.  Plan shape:
 
-        scan(points) → project(cell) ──┐
-                                       ├─ broadcast hash join on cell
-        polygons → covering(cells) ────┘
-        → mapInPandas ray-cast refine
+        scan(points) → project(cell) ──────────────────┐
+                                                       ├─ broadcast hash join on cell,
+        polygons → covering(cells) → ring lat band ────┘   filter: full OR
+                                                           (lat band AND ray cast)
 
-    No shuffle of the points side; covering is broadcast.
+    No shuffle of the points side; covering is broadcast once.  Points in
+    full cells pass as they are; boundary candidates are ray-cast by
+    ``functions.geometry.ray_cast_col`` in the same JVM filter, so the
+    covering is the plan's only Python stage.
 
     ``broadcast_covering=False`` is the big-big path: when the polygon
     layer's covering does not fit an executor (continent-scale admin
@@ -274,43 +281,38 @@ def point_in_polygon_join(
         pts = points.withColumn(
             "cell", cell_col(F.col(lat_c), F.col(lon_c), level)
         )
+    cov = _with_ring_lat_band(cov)
     if broadcast_covering:
         cand = pts.join(F.broadcast(cov), "cell", "inner")
     else:
         cand = pts.join(cov.hint("shuffle_hash"), "cell", "inner")
-
-    out_cols = [
-        f.name for f in cand.schema.fields if f.name not in ("ring", "cell", "full")
-    ]
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in cand.schema.fields
-        if f.name in out_cols
+    # packed covering: points in FULL cells are inside by construction;
+    # boundary-cell candidates are ray-cast in the same JVM filter
+    inside = F.col("full") | _boundary_hit(
+        F.col("ring"), F.col("ring_lat_min"), F.col("ring_lat_max"),
+        F.col(lat_c), F.col(lon_c),
+    )
+    return cand.filter(inside).drop(
+        "cell", "full", "ring", "ring_lat_min", "ring_lat_max"
     )
 
-    # packed covering: points in FULL cells are inside by construction — no
-    # Python touches them; only boundary-cell candidates reach the ray-cast
-    full_hits = cand.filter(F.col("full")).select(*out_cols)
-    boundary = cand.filter(~F.col("full"))
 
-    def refine(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            keep = np.zeros(len(pdf), dtype=bool)
-            lat = pdf[lat_c].to_numpy()
-            lon = pdf[lon_c].to_numpy()
-            # group candidate rows by polygon to vectorize over points
-            for pid, idx in pdf.groupby("poly_id", sort=False).indices.items():
-                ring = pdf["ring"].iloc[idx[0]]
-                rl = np.array([p["lat"] for p in ring])
-                rx = np.array([p["lon"] for p in ring])
-                keep[idx] = _ray_cast_np(lat[idx], lon[idx], rl, rx)
-            out = pdf.loc[keep, out_cols]
-            if len(out):
-                yield out
+def _with_ring_lat_band(cov: DataFrame) -> DataFrame:
+    """Attach the ring's latitude extent ``ring_lat_min``/``ring_lat_max``
+    to each covering row, on the covering side of the join."""
+    return cov.withColumn("ring_lat_min", F.array_min("ring.lat")).withColumn(
+        "ring_lat_max", F.array_max("ring.lat")
+    )
 
-    return boundary.mapInPandas(refine, out_schema).unionByName(full_hits)
+
+def _boundary_hit(
+    ring: Column, lat_min: Column, lat_max: Column, lat: Column, lon: Column
+) -> Column:
+    """Ray-cast refine of a boundary candidate, behind its lat band.  The
+    band is exact, not a heuristic: a crossing edge needs one vertex at or
+    below ``lat`` and one above, so an odd crossing count implies
+    ``lat_min <= lat < lat_max`` — rows outside it skip the fold."""
+    return (lat >= lat_min) & (lat < lat_max) & ray_cast_col(ring, lat, lon)
 
 
 def point_in_polygon_join_holes(
@@ -330,9 +332,10 @@ def point_in_polygon_join_holes(
 
       hits(shell)  LEFT ANTI JOIN  hits(any hole)  ON (id, poly_id)
 
-    both legs are :func:`point_in_polygon_join` (broadcast covering +
-    ray-cast refine — the points side is never shuffled pre-join).  The
-    anti join co-partitions the two HIT sets on (id, poly_id) — the
+    both legs are :func:`point_in_polygon_join` (one covering broadcast +
+    one JVM ray-cast filter each, so the two coverings are the only
+    Python stages; the points side is never shuffled pre-join).  The anti
+    join co-partitions the two HIT sets on (id, poly_id) — the
     already-PIP-filtered rows, not the raw points; hole hits are
     additionally collapsed to distinct (id, poly_id) first, so a point
     in several holes costs one row.
@@ -438,57 +441,39 @@ def point_in_polygon_anti(
     shape: a naive anti = points ⟕ hits needs a shuffle of the whole
     points side on the point id.  Instead the packed covering is first
     collapsed to AT MOST ONE row per cell —
-    ``(cell, any_full, boundary rings)`` — so the broadcast left-outer
-    join can never expand the points side, and the verdict is row-local:
+    ``(cell, any_full, boundary rings + their lat bands)`` — so the
+    broadcast left-outer join can never expand the points side, and the
+    verdict is one row-local JVM filter:
 
-      - no covering row for the cell       → uncovered  (pure codegen)
-      - some polygon fully covers the cell → covered    (pure codegen)
-      - boundary rings only                → ray-cast refine (Arrow)
+      - no covering row for the cell       → uncovered
+      - some polygon fully covers the cell → covered
+      - boundary rings only                → covered iff ``exists`` a ring
+                                             whose lat band holds the point
+                                             and whose ray cast hits
 
     Zero exchanges of the points side; the only shuffle is the tiny
-    per-cell covering roll-up (O(covering cells), broadcast after).
+    per-cell covering roll-up (O(covering cells), broadcast once after).
 
     Output: the uncovered input point rows, original columns.
     """
     lat_c, lon_c = point_cols
-    cov_cells = polygon_covering(polygons, level).groupBy("cell").agg(
+    cov = _with_ring_lat_band(polygon_covering(polygons, level))
+    cov_cells = cov.groupBy("cell").agg(
         F.max(F.col("full").cast("int")).alias("any_full"),
-        F.collect_list(F.when(~F.col("full"), F.col("ring"))).alias("rings"),
+        F.collect_list(
+            F.when(~F.col("full"), F.struct("ring", "ring_lat_min", "ring_lat_max"))
+        ).alias("rings"),
     )
     pts = points.withColumn(
         "cell", cell_col(F.col(lat_c), F.col(lon_c), level)
     )
     joined = pts.join(F.broadcast(cov_cells), "cell", "left_outer")
-
-    out_cols = list(points.columns)
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in points.schema.fields
+    lat, lon = F.col(lat_c), F.col(lon_c)
+    covered = (F.col("any_full") == 1) | F.exists(
+        "rings",
+        lambda r: _boundary_hit(r["ring"], r["ring_lat_min"], r["ring_lat_max"], lat, lon),
     )
-
-    clear = joined.filter(F.col("any_full").isNull()).select(*out_cols)
-    boundary = joined.filter(F.col("any_full") == 0)
-
-    def refine(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            lat = pdf[lat_c].to_numpy()
-            lon = pdf[lon_c].to_numpy()
-            covered = np.zeros(len(pdf), dtype=bool)
-            # rings are identical for every row of a cell — vectorize per cell
-            for _cell, idx in pdf.groupby("cell", sort=False).indices.items():
-                for ring in pdf["rings"].iloc[idx[0]]:
-                    rl = np.array([p["lat"] for p in ring])
-                    rx = np.array([p["lon"] for p in ring])
-                    covered[idx] = covered[idx] | _ray_cast_np(
-                        lat[idx], lon[idx], rl, rx
-                    )
-            out = pdf.loc[~covered, out_cols]
-            if len(out):
-                yield out
-
-    return clear.unionByName(boundary.mapInPandas(refine, out_schema))
+    return joined.filter(F.col("any_full").isNull() | ~covered).select(*points.columns)
 
 
 # --------------------------------------------------------------- E3: kNN ---

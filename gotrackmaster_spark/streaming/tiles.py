@@ -81,8 +81,8 @@ def geofence_alerts(
     polygon layer, then windowed per-polygon hit counts.
 
     The join is `operators.spatial.point_in_polygon_join` unchanged — a
-    stream-static broadcast equi-join on the covering cell plus the
-    Arrow-batched ray-cast refine, so the stream side never shuffles
+    stream-static broadcast equi-join on the covering cell whose condition
+    carries the JVM ray-cast refine, so the stream side never shuffles
     before the windowed aggregate and the polygon covering is built once
     per micro-batch from the static side.  The watermark is assigned to
     the surviving event-time column AFTER the join so the stateful window

@@ -77,3 +77,55 @@ def test_poly_geometry_plan_zero_exchanges(spark):
     assert "Exchange" not in plan, plan
     assert "Join" not in plan
     assert "Generate" not in plan
+
+
+def test_ray_cast_col_matches_numpy_row_for_row(spark):
+    """``ray_cast_col`` == ``_ray_cast_np`` bit for bit, in one Spark job,
+    on the probes where float order matters: random polygons, points at
+    exact vertex latitudes and on vertices, horizontal edges, repeated
+    vertices, NaN coordinates, and an edge whose crossing is NaN."""
+    import numpy as np
+
+    from gotrackmaster_spark.functions.geometry import ray_cast_col
+    from gotrackmaster_spark.operators.spatial import _ray_cast_np
+    from gotrackmaster_spark.session import local_frame
+
+    rng = np.random.default_rng(7)
+    rings = []
+    for k in range(24):
+        ring = [tuple(v) for v in rng.uniform(-5.0, 5.0, (int(rng.integers(3, 9)), 2))]
+        if k % 3 == 0:  # a horizontal edge and a repeated vertex
+            ring.insert(1, (ring[0][0], ring[0][1] + 1.5))
+            ring.insert(2, ring[1])
+        rings.append(ring)
+    # at lat = 0 the wrap edge's crossing is (-1e308 - 1e308) * 0 = -inf * 0,
+    # a NaN x_int (numpy: never left of it; Spark: NaN sorts above all)
+    rings.append([(0.0, 1e308), (1.0, 5.0), (1.0, -1e308)])
+    nan = float("nan")
+    rows = []
+    for ring in rings:
+        probes = [tuple(p) for p in rng.uniform(-6.0, 6.0, (60, 2))]
+        probes += [(la, float(rng.uniform(-6.0, 6.0))) for la, _ in ring]
+        probes += list(ring)
+        probes += [(nan, 0.5), (0.5, nan), (nan, nan), (0.0, 0.0)]
+        rows += [(ring, float(la), float(lo)) for la, lo in probes]
+    df = local_frame(
+        spark, rows,
+        "ring array<struct<lat:double,lon:double>>, lat double, lon double",
+    )
+    got = df.select(
+        "ring", "lat", "lon",
+        ray_cast_col(F.col("ring"), F.col("lat"), F.col("lon")).alias("inside"),
+    ).collect()
+    assert len(got) == len(rows)
+    mismatched = [
+        (r.lat, r.lon)
+        for r in got
+        if r.inside
+        != bool(_ray_cast_np(
+            np.array([r.lat]), np.array([r.lon]),
+            np.array([v.lat for v in r.ring]), np.array([v.lon for v in r.ring]),
+        )[0])
+    ]
+    assert mismatched == []
+    assert any(r.inside for r in got) and not all(r.inside for r in got)

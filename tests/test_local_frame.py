@@ -54,6 +54,14 @@ def _write_gpx(dir_path: Path) -> str:
     return str(path)
 
 
+def _package_lines():
+    """(path relative to the package, line number, line) over its sources."""
+    root = Path(gotrackmaster_spark.__file__).parent
+    for p in sorted(root.rglob("*.py")):
+        for i, line in enumerate(p.read_text().splitlines(), 1):
+            yield p.relative_to(root), i, line
+
+
 def _lineage(df) -> str:
     return df._jdf.queryExecution().toRdd().toDebugString()
 
@@ -140,17 +148,22 @@ def test_grouped_map_udfs_emit_no_type_hint_warning(spark, tmp_path):
     assert hints == []
 
 
+def test_no_python_rdd_emptiness_probe():
+    """``df.rdd.isEmpty()`` converts the frame to a pickled Python RDD, so
+    the probe runs a Python-worker job; ``DataFrame.isEmpty()`` answers in
+    the JVM."""
+    assert [f"{p}:{i}" for p, i, line in _package_lines() if ".rdd.isEmpty(" in line] == []
+
+
 def test_create_dataframe_only_inside_local_frame():
     """Every driver-side frame goes through ``local_frame``; a list-based
     ``createDataFrame`` elsewhere would bring back the pickled PythonRDD."""
     src, start = inspect.getsourcelines(session.local_frame)
     allowed = range(start, start + len(src))
-    root = Path(gotrackmaster_spark.__file__).parent
+    session_py = Path(session.__file__).relative_to(Path(gotrackmaster_spark.__file__).parent)
     hits = [
-        f"{p.relative_to(root)}:{i}"
-        for p in sorted(root.rglob("*.py"))
-        for i, line in enumerate(p.read_text().splitlines(), 1)
-        if "createDataFrame(" in line
-        and not (p == Path(session.__file__) and i in allowed)
+        f"{p}:{i}"
+        for p, i, line in _package_lines()
+        if "createDataFrame(" in line and not (p == session_py and i in allowed)
     ]
     assert hits == []

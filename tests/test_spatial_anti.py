@@ -12,6 +12,7 @@ the final groupBy.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from gotrackmaster_spark import driver_queries as Q
@@ -61,15 +62,32 @@ def test_pip_antijoin_plan_no_points_expansion(spark):
     assert "BroadcastNestedLoopJoin" not in plan
     # covering rolled up per cell, then broadcast left-outer against points
     assert "BroadcastHashJoin" in plan
-    # three hash exchanges in the pre-AQE plan: the per-cell covering
-    # roll-up appears once under EACH union branch (identical subtrees —
-    # execution dedups them into a ReusedExchange) plus the final tile
-    # aggregate; the points scan feeds the join, the filter split, and
-    # the partial agg with no exchange of its own
-    assert plan.count("Exchange hashpartitioning") == 3, plan
+    # two hash exchanges in the pre-AQE plan: the per-cell covering
+    # roll-up and the final tile aggregate; the points scan feeds the
+    # join, the ray-cast filter and the partial agg with no exchange of
+    # its own
+    assert plan.count("Exchange hashpartitioning") == 2, plan
     # and neither exchange partitions on the points' id — the points
     # side is never shuffled
     assert "hashpartitioning(event_id" not in plan, plan
+
+
+@pytest.mark.parametrize("op", ["join_z", "join_hex", "anti"])
+def test_pip_plans_one_broadcast_refine_in_jvm(spark, op):
+    """Full cells and the boundary ray cast share one filter over one
+    broadcast join: no union of two branches (each with its own covering
+    broadcast), and the covering is the only Python stage."""
+    pts = Q.geo_events(spark, SF_DIR).select("event_id", "lat", "lon")
+    polys = Q.rect_polygons(spark, SF_DIR)
+    if op == "anti":
+        df = point_in_polygon_anti(pts, polys, level=7)
+    else:
+        grid = op.split("_")[1]
+        df = point_in_polygon_join(pts, polys, level=7 if grid == "z" else 4, grid=grid)
+    plan = _plan(df)
+    assert plan.count("BroadcastExchange") == 1, plan
+    assert "Union" not in plan, plan
+    assert plan.count("MapInPandas") == 1, plan
 
 
 def test_od_matrix_plan_two_aggregates_no_join(spark):
