@@ -189,16 +189,19 @@ SQL_EMBEDDING_TOPK = D.sql_embedding_topk(k=10, query_mod=50)
 # NOT SQL-expressible: sequential data-dependent kernels → rows-only check)
 # --------------------------------------------------------------------------
 
-def synthetic_tracks(spark, sf_dir):
-    """Random-walk tracks derived from events: per-user cumulative ±100 m
-    steps at ~1 min cadence — GPS-plausible speeds so the classification
-    ladder produces non-degenerate labels."""
+def synthetic_tracks(spark, sf_dir, step_div: float = 100000.0):
+    """Random-walk tracks derived from events: per-user cumulative steps
+    of up to ±100/``step_div`` degrees at ~1 min cadence.  The default
+    (±100 m) gives GPS-plausible speeds so the classification ladder
+    produces non-degenerate labels; a power-of-two ``step_div`` (8192)
+    makes every step dyadic, so every partial sum is an exact double and
+    the cumulative lat/lon is independent of summation order."""
     from pyspark.sql import Window
 
     ev = _t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("event_id")
-    dlat = ((F.col("event_id") * 2654435761) % 201 - 100).cast("double") / 100000.0
-    dlon = ((F.col("event_id") * 40503 + 11) % 201 - 100).cast("double") / 100000.0
+    dlat = ((F.col("event_id") * 2654435761) % 201 - 100).cast("double") / step_div
+    dlon = ((F.col("event_id") * 40503 + 11) % 201 - 100).cast("double") / step_div
     base_lat = ((F.col("user_id") * 617) % 120).cast("double") - 60.0
     base_lon = ((F.col("user_id") * 1009) % 300).cast("double") - 150.0
     return (

@@ -646,7 +646,7 @@ def q_knn_hex(spark, sf_dir):
     )
     n_data = pq.ParquetFile(f"{sf_dir}/events.parquet").metadata.num_rows
     out = hex_knn_join(qs, data, k=_KNN_HEX_K, res=3, ring=1,
-                       exclude_self=True, n_data=n_data, sort_merge=True)
+                       exclude_self=True, n_data=n_data)
     return out.select(
         "query_id", "data_id", F.col("rank").alias("rnk"),
         F.round("dist_m", 3).alias("dist_r"),
@@ -1644,37 +1644,12 @@ FROM hsum h JOIN zsum z ON h.track_id = z.track_id
 _DP_EPS = 0.02
 
 
-def dp_tracks(spark, sf_dir):
-    """Random-walk tracks with DYADIC (k/8192) steps: every partial sum is
-    an exact double, making the cumulative-sum lat/lon independent of
-    summation order — the property the DP oracle's bit-equality rests on."""
-    from pyspark.sql import Window
-
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("event_id")
-    dlat = ((F.col("event_id") * 2654435761) % 201 - 100).cast("double") / 8192.0
-    dlon = ((F.col("event_id") * 40503 + 11) % 201 - 100).cast("double") / 8192.0
-    base_lat = ((F.col("user_id") * 617) % 120).cast("double") - 60.0
-    base_lon = ((F.col("user_id") * 1009) % 300).cast("double") - 150.0
-    return (
-        ev.select("event_id", "user_id")
-        .withColumn("pt_idx", (F.row_number().over(w) - 1).cast("int"))
-        .withColumn("lat", base_lat + F.sum(dlat).over(w))
-        .withColumn("lon", base_lon + F.sum(dlon).over(w))
-        .withColumn("ele", ((F.col("event_id") * 13) % 400).cast("double") + 100.0)
-        .withColumn("ts_ns", (F.lit(1700000000) + F.col("user_id") + F.col("pt_idx") * 60) * F.lit(1_000_000_000))
-        .withColumn("ts", F.timestamp_micros((F.col("ts_ns") / 1000).cast("long")))
-        .withColumn("track_id", F.col("user_id").cast("string"))
-        .withColumn("trk_no", F.lit(0))
-        .withColumn("seg_no", F.lit(0))
-        .select("track_id", "trk_no", "seg_no", "pt_idx", "lat", "lon", "ele", "ts", "ts_ns")
-    )
-
-
 def q_dp_simplify(spark, sf_dir):
     from gotrackmaster_spark.operators.repair import douglas_peucker_keep
 
-    pts = dp_tracks(spark, sf_dir)
+    # dyadic (k/8192) steps: the DP oracle's bit-equality rests on an
+    # order-independent cumulative sum
+    pts = synthetic_tracks(spark, sf_dir, step_div=8192.0)
     base = pts.groupBy("track_id").agg(F.count("*").alias("n_points"))
     kept = douglas_peucker_keep(pts, _DP_EPS)
     idx = F.col("pt_idx").cast("long")
@@ -3238,7 +3213,6 @@ __all__ = [
     "q_erratic_outliers",
     "SQL_ERRATIC_OUTLIERS",
     "_DP_EPS",
-    "dp_tracks",
     "q_dp_simplify",
     "_dp_perp_lambda",
     "SQL_DP_SIMPLIFY",

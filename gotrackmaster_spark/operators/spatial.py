@@ -777,7 +777,6 @@ def hex_knn_join(
     round_decimals: int = 3,
     exclude_self: bool = False,
     n_data: int | None = None,
-    sort_merge: bool = True,
 ) -> DataFrame:
     """E3b — exact kNN via H3-style hex k-ring expansion with sort-merge
     refinement (the north star's literal phrasing: "kNN queries via H3
@@ -786,11 +785,11 @@ def hex_knn_join(
     Same two-phase exactness contract as `knn_join`, on the hexagonal
     lattice of ``functions.hex``: each query explodes to its hex k-ring
     (1 + 3r(r+1) cells at resolution ``res``), candidates come from an
-    equi-join on the hex cell ID — by default executed as a SORT-MERGE
-    join (both sides exchanged + sorted on the spatially-local cell key;
-    the strategy for query sets whose exploded rings are too large to
-    broadcast), ``sort_merge=False`` broadcasts the exploded ring side
-    instead — and refinement is exact Haversine + per-query top-k.
+    equi-join on the hex cell ID — executed as a SORT-MERGE join (a
+    ``merge`` hint: both sides exchanged + sorted on the spatially-local
+    cell key, the strategy for query sets whose exploded rings are too
+    large to broadcast) — and refinement is exact Haversine + per-query
+    top-k.
 
     Exactness guarantee on the planar hex lattice: the set of hexes at
     grid distance ≤ r around the query's hex is a large hexagon whose
@@ -846,10 +845,7 @@ def hex_knn_join(
         clamp_fn=_seam_clamp,
     )
     d_cell = d.withColumn("cell", hex_col(F.col("d_lat"), F.col("d_lon"), res))
-    if sort_merge:
-        cand = d_cell.join(q_ring.hint("merge"), "cell", "inner")
-    else:
-        cand = d_cell.join(F.broadcast(q_ring), "cell", "inner")
+    cand = d_cell.join(q_ring.hint("merge"), "cell", "inner")
 
     return _rank_with_exact_fallback(
         q, d, cand,

@@ -21,18 +21,35 @@ a JSON manifest log behind a narrow ``Catalog`` interface (SURVEY.md §7.5):
   manifest at commit time — the lineage answer to "which input partition
   produced which file, with how many rows".
 
+One writer, one reader.  ``commit``, ``merge``, ``replace_partitions``
+and ``compact_partitions`` all write through ``_write_snapshot`` (write
+the data, read the footers, carry untouched partitions of a base
+snapshot by reference) and publish with ``_publish``.  ``load``,
+``load_pruned``, ``load_changes`` and the partition reads of ``merge``/
+``compact_partitions``/``incremental_refresh`` only choose files from
+the manifest's ``file_stats`` and hand them to ``_read_files``, which
+reads them in the manifest's own schema (``schema_cols`` +
+``schema_types``): partition values keep their committed text and type
+(no hive inference — a string ``"00"`` stays ``"00"``), columns added by
+an evolving merge read as NULL from older files, and every reader
+returns the committed column order.
+
 On a real cluster the same layout lands on object storage and commit is a
 rename of the manifest (single-writer); here the filesystem stands in.
 """
 
 from __future__ import annotations
 
+import collections
+import functools
 import json
 import os
 import shutil
 import time
+from collections.abc import Callable, Collection
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from gotrackmaster_spark.session import local_frame
 
@@ -88,6 +105,10 @@ def _scan_snapshot_files(
             file_stats.append(entry)
             counts[pval] = counts.get(pval, 0) + rows
     return files, file_stats, counts
+
+
+def _schema_types(df: DataFrame) -> dict[str, str]:
+    return {f.name: f.dataType.simpleString() for f in df.schema.fields}
 
 
 class Catalog:
@@ -150,25 +171,58 @@ class Catalog:
     ) -> dict:
         """Write df as the next snapshot of ``table``; returns the manifest.
 
-        Lineage: per-partition row counts are computed in the SAME job
-        shape as the write (one aggregate over the output), recorded under
-        ``partitions`` in the manifest.
+        Lineage: per-partition row counts are read from the written
+        files' parquet footers and recorded under ``partitions`` in the
+        manifest.
 
         ``stats_cols``: numeric columns whose per-file min/max are read
         from the parquet footers into the manifest (Iceberg's file-level
         column stats) — :meth:`load_pruned` uses them to skip whole files
         on range predicates without opening them.
         """
-        sid, snap_dir = self._next_snapshot_dir(table)
+        manifest = self._write_snapshot(
+            table,
+            df,
+            partition_col,
+            stats_cols,
+            extra_metrics or {},
+            schema_cols=df.columns,
+            schema_types=_schema_types(df),
+            done=attempted_partitions or (),
+        )
+        return self._publish(table, manifest)
 
+    def _write_snapshot(
+        self,
+        table: str,
+        df: DataFrame,
+        partition_col: str | None,
+        stats_cols: list[str] | None,
+        metrics: dict,
+        schema_cols: list[str],
+        schema_types: dict[str, str],
+        base: dict | None = None,
+        replaced: Collection[str] = (),
+        done: Collection[str] = (),
+    ) -> dict:
+        """The one write path: write ``df`` as the next snapshot of
+        ``table`` and return its manifest, unpublished.
+
+        ``done`` partitions are recorded even when they produced no rows
+        (an attempted partition with zero rows is still DONE, so resume
+        converges instead of rescanning it forever).  With a ``base``
+        manifest, every partition of it not in ``replaced`` rides along
+        BY REFERENCE (``reused_partitions``: partition → owning snapshot
+        data dir), file stats intact — zero data movement."""
+        sid, snap_dir = self._next_snapshot_dir(table)
         writer = df.write.mode("errorifexists")
         if partition_col:
             writer = writer.partitionBy(partition_col)
         writer.parquet(snap_dir)
 
         # Lineage WITHOUT recomputation: row counts come from the written
-        # files' parquet footers (pure metadata, no second Spark job — the
-        # old groupBy().count().collect() re-ran the entire upstream
+        # files' parquet footers (pure metadata, no second Spark job — a
+        # groupBy().count().collect() would re-run the entire upstream
         # lineage after the write, doubling every checkpointed stage at
         # scale).  On a real cluster these are the file-level stats an
         # Iceberg writer records in its manifests at commit.
@@ -177,10 +231,22 @@ class Catalog:
         )
         if not partition_col:
             counts.setdefault("__all__", 0)
-        # an attempted partition that produced zero rows is still DONE —
-        # record it so resume converges instead of rescanning it forever
-        for p in attempted_partitions or []:
+        for p in done:
             counts.setdefault(str(p), 0)
+        if base is not None:
+            owners = base.get("reused_partitions") or {}
+            reused = {
+                p: owners.get(p, base["data_dir"])
+                for p in base["partitions"]
+                if p not in replaced
+            }
+            counts.update({p: base["partitions"][p] for p in reused})
+            file_stats += [
+                dict(fs, dir=reused[fs["partition"]])
+                for fs in base["file_stats"]
+                if fs["partition"] in reused
+            ]
+            metrics = dict(metrics, partitions_reused=len(reused))
 
         manifest = {
             "table": table,
@@ -191,18 +257,16 @@ class Catalog:
             "files": sorted(files),
             "file_stats": sorted(file_stats, key=lambda s: s["path"]),
             "partition_col": partition_col,
-            "partition_type": (
-                df.schema[partition_col].dataType.simpleString()
-                if partition_col
-                else None
-            ),
-            "schema_cols": df.columns,
-            "schema_types": {f.name: f.dataType.simpleString() for f in df.schema.fields},
+            "partition_type": schema_types[partition_col] if partition_col else None,
+            "schema_cols": schema_cols,
+            "schema_types": schema_types,
             "partitions": counts,
-            "total_rows": sum(counts.values()),
-            "metrics": extra_metrics or {},
         }
-        return self._publish(table, manifest)
+        if base is not None:
+            manifest["reused_partitions"] = reused
+        manifest["total_rows"] = sum(counts.values())
+        manifest["metrics"] = metrics
+        return manifest
 
     def _publish(self, table: str, manifest: dict) -> dict:
         log = self._log_dir(table)
@@ -259,11 +323,9 @@ class Catalog:
         """
         if when_matched not in ("update", "delete"):
             raise ValueError("when_matched must be 'update' or 'delete'")
-        from pyspark.sql import functions as F
-
         m = self.manifest(table)
         partition_col = m["partition_col"]
-        tgt_cols = self.load(spark, table).limit(0).columns
+        tgt_cols = m["schema_cols"]
         missing = [c for c in tgt_cols if c not in source.columns]
         if missing:
             raise ValueError(f"source is missing target columns: {missing}")
@@ -271,10 +333,10 @@ class Catalog:
         if new_cols and evolve_schema and when_matched == "update":
             # Iceberg-style ADD COLUMN via merge: rewritten partitions
             # materialize the new columns; untouched partitions keep their
-            # old files and read back as NULL (see _read_partitions);
-            # older snapshots are unaffected (time travel sees the old
-            # schema).  The evolved column list is recorded in the
-            # manifest so readers get a deterministic column order.
+            # old files and read back as NULL (see _read_files); older
+            # snapshots are unaffected (time travel sees the old schema).
+            # The evolved column list is recorded in the manifest so
+            # readers get a deterministic column order.
             all_cols = tgt_cols + new_cols
             _null_patch = {
                 c: F.lit(None).cast(source.schema[c].dataType) for c in new_cols
@@ -290,13 +352,12 @@ class Catalog:
             all_cols = tgt_cols
             _null_patch = {}
         source = source.select(*all_cols)
-        tgt_cols = all_cols
 
         if not partition_col:
             tgt = self.load(spark, table)
             for c, nc in _null_patch.items():
                 tgt = tgt.withColumn(c, nc)
-            merged = self._merge_rows(tgt, source, key_cols, when_matched, tgt_cols)
+            merged = self._merge_rows(tgt, source, key_cols, when_matched, all_cols)
             return self.commit(
                 merged,
                 table,
@@ -309,63 +370,30 @@ class Catalog:
             str(r[0])
             for r in source.select(F.col(partition_col).cast("string")).distinct().collect()
         )
-        part_dirs = self._partition_dirs(m)  # pval -> owning data dir
-        rewrite_vals = [p for p in affected if p in part_dirs]
-        insert_only = [p for p in affected if p not in part_dirs]
-
-        tgt = self._read_partitions(spark, m, rewrite_vals)
+        tgt = self._read_partitions(spark, m, affected)
         for c, nc in _null_patch.items():
             tgt = tgt.withColumn(c, nc)
         src_mask = F.col(partition_col).cast("string").isin(affected)
         merged = self._merge_rows(
-            tgt, source.filter(src_mask), key_cols, when_matched, tgt_cols
-        )
-
-        sid, snap_dir = self._next_snapshot_dir(table)
-        merged.write.mode("errorifexists").partitionBy(partition_col).parquet(snap_dir)
-
-        files, file_stats, counts = _scan_snapshot_files(
-            snap_dir, partition_col, stats_cols
+            tgt, source.filter(src_mask), key_cols, when_matched, all_cols
         )
         # an affected partition whose rows were all deleted is still DONE
-        for p in rewrite_vals + insert_only:
-            counts.setdefault(p, 0)
-
-        # untouched partitions ride along by reference, stats intact
-        reused: dict[str, str] = {}
-        for pval, owner in part_dirs.items():
-            if pval in affected:
-                continue
-            reused[pval] = owner
-            counts[pval] = m["partitions"].get(pval, 0)
-        for fs in m["file_stats"]:
-            if fs["partition"] in reused:
-                entry = dict(fs)
-                entry["dir"] = reused[fs["partition"]]
-                file_stats.append(entry)
-
-        manifest = {
-            "table": table,
-            "snapshot_id": sid,
-            "parent_id": sid - 1,
-            "created_unix": time.time(),
-            "data_dir": snap_dir,
-            "files": sorted(files),
-            "file_stats": sorted(file_stats, key=lambda s: s["path"]),
-            "partition_col": partition_col,
-            "partition_type": m.get("partition_type"),
-            "schema_cols": tgt_cols,
-            "schema_types": {f.name: f.dataType.simpleString() for f in merged.schema.fields},
-            "partitions": counts,
-            "reused_partitions": reused,
-            "total_rows": sum(counts.values()),
-            "metrics": dict(
+        manifest = self._write_snapshot(
+            table,
+            merged,
+            partition_col,
+            stats_cols,
+            dict(
                 extra_metrics or {},
                 merge_mode=when_matched,
-                partitions_rewritten=len(rewrite_vals) + len(insert_only),
-                partitions_reused=len(reused),
+                partitions_rewritten=len(affected),
             ),
-        }
+            schema_cols=all_cols,
+            schema_types=_schema_types(merged),
+            base=m,
+            replaced=affected,
+            done=affected,
+        )
         return self._publish(table, manifest)
 
     @staticmethod
@@ -376,8 +404,6 @@ class Catalog:
         when_matched: str,
         cols: list[str],
     ) -> DataFrame:
-        from pyspark.sql import functions as F
-
         if when_matched == "delete":
             return tgt.join(
                 src.select(*key_cols).distinct(), key_cols, "left_anti"
@@ -402,111 +428,50 @@ class Catalog:
             )
         return joined.select(*out).select(*cols)
 
-    def _partition_dirs(self, m: dict) -> dict:
-        """partition value -> data dir of the snapshot owning its files."""
-        reused = m.get("reused_partitions") or {}
-        return {
-            p: reused.get(p, m["data_dir"])
-            for p in m["partitions"]
-        }
-
     def _read_partitions(
         self, spark: SparkSession, m: dict, pvals: list[str]
     ) -> DataFrame:
-        """Read exactly the given partitions of a snapshot, resolving each
-        to its owning dir (post-merge snapshots spread partitions across
-        snapshot dirs).  Empty selection → empty frame with full schema."""
-        import urllib.parse
-
-        from pyspark.sql import functions as F
-
-        partition_col = m["partition_col"]
-        part_dirs = self._partition_dirs(m)
-        by_dir: dict[str, list[str]] = {}
-        for p in pvals:
-            d = part_dirs[p]
-            by_dir.setdefault(d, []).append(p)
-        pieces = []
-        for d, vals in sorted(by_dir.items()):
-            paths = [
-                os.path.join(d, f"{partition_col}={urllib.parse.quote(v, safe='')}")
-                for v in vals
-            ]
-            paths = [p for p in paths if os.path.isdir(p)]
-            if not paths:
-                continue
-            pieces.append(spark.read.option("basePath", d).parquet(*paths))
-        if not pieces:
-            # zero rows, schema from the manifest — the snapshot dir may
-            # hold NO parquet files at all (e.g. a delete-merge that
-            # emptied every partition it touched), so reading it back
-            # for the schema would fail with UNABLE_TO_INFER_SCHEMA
-            out = self._manifest_empty_frame(spark, m)
-            if out is None:
-                out = spark.read.parquet(m["data_dir"]).limit(0)
-        else:
-            out = pieces[0]
-            for p in pieces[1:]:
-                # pieces from pre-evolution snapshots may lack columns a
-                # later merge added — they read back as NULL (Iceberg
-                # add-column semantics)
-                out = out.unionByName(p, allowMissingColumns=True)
-            sc = m.get("schema_cols")
-            if sc:
-                from pyspark.sql import functions as F
-
-                types = m.get("schema_types") or {}
-
-                def _missing(c):
-                    col = F.lit(None)
-                    if types.get(c):
-                        col = col.cast(types[c])
-                    return col.alias(c)
-
-                out = out.select(
-                    *[F.col(c) if c in out.columns else _missing(c) for c in sc]
-                )
-        # hive partition-type inference guesses from the dir strings;
-        # restore the committed logical type recorded in the manifest
-        if m.get("partition_type"):
-            out = out.withColumn(
-                partition_col, F.col(partition_col).cast(m["partition_type"])
-            )
-        return out
+        """Read exactly the given partitions of a snapshot, each from its
+        owning dir (post-merge snapshots spread partitions across snapshot
+        dirs).  Empty selection → empty frame with full schema."""
+        want = set(pvals)
+        return self._read_files(
+            spark, m, self._live_files(m, lambda fs: fs["partition"] in want)
+        )
 
     @staticmethod
-    def _manifest_empty_frame(spark: SparkSession, m: dict) -> DataFrame | None:
-        """Typed zero-row frame rebuilt from the manifest's recorded schema,
-        or None when an old manifest predates schema_types.  Needed wherever
-        a snapshot dir is read back: a 0-row commit writes NO parquet data
-        files, so schema inference fails with UNABLE_TO_INFER_SCHEMA — an
-        empty batch is VALID input to a checkpointed pipeline (degenerate-
-        input sweep, K=0)."""
-        types = m.get("schema_types") or {}
-        cols = m.get("schema_cols") or list(types)
-        if cols and all(c in types for c in cols):
-            ddl = ", ".join(f"`{c}` {types[c]}" for c in cols)
+    def _read_files(
+        spark: SparkSession, m: dict, files: Collection[tuple[str, str]]
+    ) -> DataFrame:
+        """The one read path: the given ``(owning dir, relative path)``
+        files of snapshot ``m``, read in the manifest's own schema.
+
+        Handing the reader the schema means hive partition values keep
+        their committed text and type (inference would read the string
+        ``"00"`` as the int 0), files written before an evolving merge
+        read the added columns as NULL (Iceberg add-column semantics),
+        and no footer is opened to infer anything.  One read per owning
+        dir (each is its own hive ``basePath``), unioned.  No files →
+        typed empty frame: a 0-row commit writes no parquet data files at
+        all, and an empty batch is VALID input to a checkpointed pipeline
+        (degenerate-input sweep, K=0)."""
+        cols = m["schema_cols"]
+        ddl = ", ".join(f"`{c}` {m['schema_types'][c]}" for c in cols)
+        by_dir: dict[str, list[str]] = {}
+        for d, rel in sorted(files):
+            by_dir.setdefault(d, []).append(os.path.join(d, rel))
+        if not by_dir:
             return local_frame(spark, [], ddl)
-        return None
+        pieces = [
+            spark.read.schema(ddl).option("basePath", d).parquet(*paths)
+            for d, paths in by_dir.items()
+        ]
+        return functools.reduce(DataFrame.unionByName, pieces).select(*cols)
 
     # -------------------------------------------------------------- read ---
     def load(self, spark: SparkSession, table: str, snapshot_id: int | None = None) -> DataFrame:
         m = self.manifest(table, snapshot_id)
-        if m.get("reused_partitions"):
-            return self._read_partitions(spark, m, sorted(m["partitions"]))
-        if not m.get("files"):
-            empty = self._manifest_empty_frame(spark, m)
-            if empty is not None:
-                return empty
-        df = spark.read.parquet(m["data_dir"])
-        if m.get("partition_col") and m.get("partition_type"):
-            from pyspark.sql import functions as F
-
-            df = df.withColumn(
-                m["partition_col"],
-                F.col(m["partition_col"]).cast(m["partition_type"]),
-            )
-        return df
+        return self._read_files(spark, m, self._live_files(m))
 
     def load_pruned(
         self,
@@ -525,33 +490,25 @@ class Catalog:
         ``operators.skew.repartition_by_cell_range`` at write time so cell
         ranges land disjoint).  Files committed without stats for ``col``
         are conservatively read."""
-        from pyspark.sql import functions as F
+
+        def overlaps(fs: dict) -> bool:
+            st = (fs.get("stats") or {}).get(col)
+            return st is None or (st["max"] >= lo and st["min"] <= hi)
 
         m = self.manifest(table, snapshot_id)
-        by_dir: dict[str, list[str]] = {}
-        for fs in m["file_stats"]:
-            st = (fs.get("stats") or {}).get(col)
-            if st is None or (st["max"] >= lo and st["min"] <= hi):
-                d = fs.get("dir") or m["data_dir"]
-                by_dir.setdefault(d, []).append(os.path.join(d, fs["path"]))
-        if not by_dir:
-            df = self.load(spark, table, snapshot_id).limit(0)
-        else:
-            pieces = [
-                spark.read.option("basePath", d).parquet(*paths)
-                for d, paths in sorted(by_dir.items())
-            ]
-            df = pieces[0]
-            for p in pieces[1:]:
-                df = df.unionByName(p)
+        df = self._read_files(spark, m, self._live_files(m, overlaps))
         return df.filter((F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi)))
 
-    def _live_files(self, m: dict) -> set:
+    @staticmethod
+    def _live_files(m: dict, keep: Callable[[dict], bool] = lambda fs: True) -> set:
         """Effective (owning dir, relative path) file set of a snapshot —
         own files plus partitions carried by reference from older
-        snapshots after a merge/compact."""
+        snapshots after a merge/compact — restricted to the file stats
+        entries ``keep`` accepts."""
         return {
-            (fs.get("dir") or m["data_dir"], fs["path"]) for fs in m["file_stats"]
+            (fs.get("dir") or m["data_dir"], fs["path"])
+            for fs in m["file_stats"]
+            if keep(fs)
         }
 
     def changed_files(
@@ -588,40 +545,9 @@ class Catalog:
         rewritten twice in the range contributes only its final files,
         and deletes are reflected by absence, not tombstones.
         """
-        from pyspark.sql import functions as F
-
-        m = self.manifest(table, to_snapshot)
         by_dir = self.changed_files(table, from_snapshot, to_snapshot)
-        if not by_dir:
-            return self.load(spark, table, to_snapshot).limit(0)
-        pieces = [
-            spark.read.option("basePath", d).parquet(
-                *[os.path.join(d, rel) for rel in rels]
-            )
-            for d, rels in sorted(by_dir.items())
-        ]
-        out = pieces[0]
-        for p in pieces[1:]:
-            # pre-evolution files may lack columns a later merge added
-            out = out.unionByName(p, allowMissingColumns=True)
-        sc = m.get("schema_cols")
-        if sc:
-            types = m.get("schema_types") or {}
-
-            def _missing(c):
-                col = F.lit(None)
-                if types.get(c):
-                    col = col.cast(types[c])
-                return col.alias(c)
-
-            out = out.select(
-                *[F.col(c) if c in out.columns else _missing(c) for c in sc]
-            )
-        if m.get("partition_col") and m.get("partition_type"):
-            out = out.withColumn(
-                m["partition_col"], F.col(m["partition_col"]).cast(m["partition_type"])
-            )
-        return out
+        files = {(d, rel) for d, rels in by_dir.items() for rel in rels}
+        return self._read_files(spark, self.manifest(table, to_snapshot), files)
 
     def changed_partitions(
         self, table: str, from_snapshot: int, to_snapshot: int | None = None
@@ -665,56 +591,25 @@ class Catalog:
         carry into the new snapshot by reference, zero data movement.
         Rows of ``df`` outside the named partitions are ignored (the
         overwrite contract is exactly the named set)."""
-        from pyspark.sql import functions as F
-
         m = self.manifest(table)
         partition_col = m["partition_col"]
         if not partition_col:
             raise ValueError("replace_partitions requires a partitioned table")
         vals = sorted(str(v) for v in partition_vals)
         piece = df.filter(F.col(partition_col).cast("string").isin(vals))
-
-        sid, snap_dir = self._next_snapshot_dir(table)
-        piece.write.mode("errorifexists").partitionBy(partition_col).parquet(snap_dir)
-
-        files, file_stats, counts = _scan_snapshot_files(
-            snap_dir, partition_col, stats_cols
+        # named partitions with no rows in df are dropped: not done, not
+        # reused, gone from the new snapshot
+        manifest = self._write_snapshot(
+            table,
+            piece,
+            partition_col,
+            stats_cols,
+            dict(extra_metrics or {}, partitions_replaced=len(vals)),
+            schema_cols=m["schema_cols"],
+            schema_types=m["schema_types"],
+            base=m,
+            replaced=vals,
         )
-        # named partitions with no rows in df are dropped: absent from
-        # counts, not reused, gone from the new snapshot
-        reused: dict[str, str] = {}
-        for pval, owner in self._partition_dirs(m).items():
-            if pval in vals:
-                continue
-            reused[pval] = owner
-            counts[pval] = m["partitions"].get(pval, 0)
-        for fs in m["file_stats"]:
-            if fs["partition"] in reused:
-                entry = dict(fs)
-                entry["dir"] = reused[fs["partition"]]
-                file_stats.append(entry)
-
-        manifest = {
-            "table": table,
-            "snapshot_id": sid,
-            "parent_id": sid - 1,
-            "created_unix": time.time(),
-            "data_dir": snap_dir,
-            "files": sorted(files),
-            "file_stats": sorted(file_stats, key=lambda s: s["path"]),
-            "partition_col": partition_col,
-            "partition_type": m.get("partition_type"),
-            "schema_cols": m.get("schema_cols"),
-            "schema_types": m.get("schema_types"),
-            "partitions": counts,
-            "reused_partitions": reused,
-            "total_rows": sum(counts.values()),
-            "metrics": dict(
-                extra_metrics or {},
-                partitions_replaced=len(vals),
-                partitions_reused=len(reused),
-            ),
-        }
         return self._publish(table, manifest)
 
     def load_as_of(self, spark: SparkSession, table: str, as_of_unix: float) -> DataFrame:
@@ -787,8 +682,6 @@ class Catalog:
         :meth:`compact`.  Older snapshots stay readable (time travel);
         ``expire_snapshots`` reclaims superseded files later.
         """
-        from pyspark.sql import functions as F
-
         m = self.manifest(table)
         partition_col = m["partition_col"]
         if not partition_col:
@@ -796,14 +689,10 @@ class Catalog:
                 "table is unpartitioned: use compact() for a full rewrite"
             )
 
-        files_per_part: dict[str, int] = {}
-        for fs in m["file_stats"]:
-            files_per_part[fs["partition"]] = files_per_part.get(fs["partition"], 0) + 1
+        files_per_part = collections.Counter(fs["partition"] for fs in m["file_stats"])
         fragmented = sorted(
             p for p, n in files_per_part.items() if n >= min_files
         )
-        part_dirs = self._partition_dirs(m)
-
         if not fragmented:
             # TRUE no-op: report without publishing.  A scheduled
             # compaction loop must not grow the snapshot log when there
@@ -817,7 +706,7 @@ class Catalog:
                 metrics={
                     "compacted_from": m["snapshot_id"],
                     "partitions_compacted": 0,
-                    "partitions_reused": len(part_dirs),
+                    "partitions_reused": len(m["partitions"]),
                 },
             )
 
@@ -828,49 +717,22 @@ class Catalog:
         sort_cols = [partition_col] + ([sort_col] if sort_col else [])
         df = df.sortWithinPartitions(*sort_cols)
 
-        sid, snap_dir = self._next_snapshot_dir(table)
-        df.write.mode("errorifexists").partitionBy(partition_col).parquet(snap_dir)
-
-        files, file_stats, counts = _scan_snapshot_files(
-            snap_dir, partition_col, stats_cols
-        )
-        files_before = sum(files_per_part[p] for p in fragmented)
-
-        reused: dict[str, str] = {}
-        for pval, owner in part_dirs.items():
-            if pval in counts:
-                continue
-            reused[pval] = owner
-            counts[pval] = m["partitions"].get(pval, 0)
-        for fs in m["file_stats"]:
-            if fs["partition"] in reused:
-                entry = dict(fs)
-                entry["dir"] = reused[fs["partition"]]
-                file_stats.append(entry)
-
-        manifest = {
-            "table": table,
-            "snapshot_id": sid,
-            "parent_id": sid - 1,
-            "created_unix": time.time(),
-            "data_dir": snap_dir,
-            "files": sorted(files),
-            "file_stats": sorted(file_stats, key=lambda s: s["path"]),
-            "partition_col": partition_col,
-            "partition_type": m.get("partition_type"),
-            "schema_cols": m.get("schema_cols"),
-            "schema_types": m.get("schema_types"),
-            "partitions": counts,
-            "reused_partitions": reused,
-            "total_rows": sum(counts.values()),
-            "metrics": dict(
+        manifest = self._write_snapshot(
+            table,
+            df,
+            partition_col,
+            stats_cols,
+            dict(
                 compacted_from=m["snapshot_id"],
                 partitions_compacted=len(fragmented),
-                partitions_reused=len(reused),
-                files_before=files_before,
-                files_after=len(files),
+                files_before=sum(files_per_part[p] for p in fragmented),
             ),
-        }
+            schema_cols=m["schema_cols"],
+            schema_types=m["schema_types"],
+            base=m,
+            replaced=fragmented,
+        )
+        manifest["metrics"]["files_after"] = len(manifest["files"])
         return self._publish(table, manifest)
 
     def rollback(self, table: str, snapshot_id: int) -> dict:
@@ -887,20 +749,13 @@ class Catalog:
             created_unix=time.time(),
             metrics=dict(old.get("metrics") or {}, rolled_back_from=snapshot_id),
         )
-        log = self._log_dir(table)
-        tmp = os.path.join(log, f".{sid:08d}.json.tmp")
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=1)
-        os.rename(tmp, os.path.join(log, f"{sid:08d}.json"))
-        return manifest
+        return self._publish(table, manifest)
 
     def expire_snapshots(self, table: str, keep_last: int = 2) -> list[int]:
         """Retention: drop all but the newest ``keep_last`` manifests and
         delete data directories no kept manifest references (a rolled-back
         snapshot's data survives while any live manifest points at it).
         Returns the expired snapshot ids."""
-        import shutil
-
         snaps = self.snapshots(table)
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1")
@@ -936,8 +791,6 @@ class Catalog:
         done = sorted(self.processed_partitions(table))
         if not done:
             return all_partitions
-        from pyspark.sql import functions as F
-
         done_df = local_frame(spark, [(d,) for d in done], f"{partition_col}_done string")
         return all_partitions.join(
             F.broadcast(done_df),
@@ -973,8 +826,6 @@ def snapshot_changelog(
 
     Output: key columns + ``change_type`` string.
     """
-    from pyspark.sql import functions as F
-
     a = cat.load(spark, table, from_snapshot)
     b = cat.load(spark, table, to_snapshot)
     val_cols = [c for c in b.columns if c not in key_cols]

@@ -76,7 +76,6 @@ ALLOWED: dict[tuple[str, str], int] = {
     ("operators/spatial.py", "emerging_hotspots"): 1,   # scalar epoch stats
     ("operators/spatial.py", "gravity_residuals"): 3,   # scalar + margins ×3
     ("operators/spatial.py", "hausdorff_cell_pairs"): 1,  # k-row capped cells
-    ("operators/spatial.py", "hex_knn_join"): 1,    # k-row fallback ids
     ("operators/spatial.py", "join_counts_median_thr"): 1,  # scalar median ×2
     ("operators/spatial.py", "knn_join"): 1,        # query rings (bounded-Q)
     ("operators/spatial.py", "knox_statistic"): 2,  # scalar ×1 (1-row counts)

@@ -277,3 +277,65 @@ def test_empty_commit_roundtrip(spark, tmp_path):
     src = spark.createDataFrame(_base_rows())
     cat.merge(spark, "t", src, key_cols=["user_id", "event_id"])
     assert cat.load(spark, "t").count() == len(_base_rows())
+
+
+def _zero_padded(spark, tmp_path):
+    """String partition values that hive inference would read as ints."""
+    cat = Catalog(str(tmp_path / "cat"))
+    rows = [
+        Row(part=p, event_id=10 * i + j, value=float(j))
+        for i, p in enumerate(["00", "01", "02"])
+        for j in range(3)
+    ]
+    cat.commit(
+        spark.createDataFrame(rows), "t", partition_col="part", stats_cols=["event_id"]
+    )
+    return cat
+
+
+def test_string_partition_values_survive_every_reader(spark, tmp_path):
+    cat = _zero_padded(spark, tmp_path)
+    parts = ["00", "01", "02"]
+    assert sorted({r.part for r in cat.load(spark, "t").collect()}) == parts
+
+    src = spark.createDataFrame([Row(part="01", event_id=10, value=-1.0)])
+    m = cat.merge(spark, "t", src, key_cols=["part", "event_id"], stats_cols=["event_id"])
+    assert sorted(m["partitions"]) == parts
+    assert m["partitions"]["01"] == 3
+
+    pruned = cat.load_pruned(spark, "t", "event_id", 0, 100)
+    got = {(r.part, r.event_id): r.value for r in pruned.collect()}
+    assert sorted({p for p, _ in got}) == parts
+    assert len(got) == 9
+    assert got[("01", 10)] == -1.0
+
+
+def test_load_pruned_matches_load_schema(spark, tmp_path):
+    cat = _zero_padded(spark, tmp_path)
+
+    def check():
+        pruned = cat.load_pruned(spark, "t", "event_id", 0, 100)
+        assert pruned.dtypes == cat.load(spark, "t").dtypes
+        # the committed column order: partition column first, as written
+        assert pruned.dtypes[0] == ("part", "string")
+
+    check()  # fresh partitioned commit
+    src = spark.createDataFrame([Row(part="02", event_id=99, value=9.0)])
+    cat.merge(spark, "t", src, key_cols=["part", "event_id"], stats_cols=["event_id"])
+    check()  # merged snapshot, partitions spread over two dirs
+
+
+def test_spark_read_only_inside_read_files():
+    """Every Catalog read goes through ``_read_files``, which reads in the
+    manifest's schema; a second ``spark.read`` would bring back hive
+    partition-type inference and drift from the other readers."""
+    import inspect
+
+    from gotrackmaster_spark.plans import checkpoint
+
+    src, start = inspect.getsourcelines(Catalog._read_files)
+    allowed = range(start, start + len(src))
+    lines = inspect.getsource(checkpoint).splitlines()
+    hits = [i for i, line in enumerate(lines, 1) if "spark.read" in line and i not in allowed]
+    assert hits == []
+    assert any("spark.read" in line for line in src)

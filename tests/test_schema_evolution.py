@@ -96,3 +96,16 @@ def test_delete_mode_ignores_extra_source_columns(spark, tmp_path):
     cat.merge(spark, "t", src, key_cols=["part", "event_id"], when_matched="delete")
     assert cat.load(spark, "t").count() == 11
     assert "extra" not in cat.load(spark, "t").columns
+
+
+def test_load_pruned_after_evolving_merge(spark, tmp_path):
+    cat = _base(spark, tmp_path)
+    src = spark.createDataFrame([Row(part="1", event_id=10, value=-1.0, lang="en")])
+    cat.merge(spark, "t", src, key_cols=["part", "event_id"], evolve_schema=True)
+
+    pruned = cat.load_pruned(spark, "t", "event_id", 0, 100)
+    assert pruned.dtypes == cat.load(spark, "t").dtypes
+    got = {(r.part, r.event_id): (r.value, r.lang) for r in pruned.collect()}
+    assert len(got) == 12
+    assert got[("1", 10)] == (-1.0, "en")
+    assert all(lang is None for (p, _), (_, lang) in got.items() if p != "1")
