@@ -46,29 +46,12 @@ def _wrap(fn):
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: geotag sf0.001 events, assign degree tiles + cells, PIP-join
-    against the polygon layer, aggregate per (polygon, tile)."""
-    from pyspark.sql import functions as F
-
-    from gotrackmaster_spark.functions.cells import cell_col
-    from gotrackmaster_spark.functions.tiles import tile_name_col
-    from gotrackmaster_spark.operators.spatial import point_in_polygon_join
-
+    """Flagship (`driver_queries.flagship_tiles`): geotag sf0.001 events,
+    PIP-join against the polygon layer, aggregate per (polygon, tile)."""
     _prepare(spark)
     sf_dir = "/root/testdata/sf0.001"
     pts = Q.geo_events(spark, sf_dir).select("event_id", "user_id", "lat", "lon")
-    polys = Q.rect_polygons(spark, sf_dir)
-    hits = point_in_polygon_join(pts, polys, level=7)
-    return (
-        hits.withColumn("tile", tile_name_col(F.col("lat"), F.col("lon"), 1.0))
-        .withColumn("cell5", F.shiftright(cell_col(F.col("lat"), F.col("lon"), 12), 14))
-        .groupBy("poly_id", "tile")
-        .agg(
-            F.count("*").alias("n_points"),
-            F.countDistinct("cell5").alias("n_cells"),
-            F.countDistinct("user_id").alias("n_tracks"),
-        )
-    )
+    return Q.flagship_tiles(pts, Q.rect_polygons(spark, sf_dir))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -31,24 +31,13 @@ CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
 def _flagship(spark, sf_dir):
-    """The BASELINE.md headline: geotag → degree tiles + cells → PIP join →
-    per-(polygon, tile) aggregate over the full events table."""
-    from pyspark.sql import functions as F
-
+    """The BASELINE.md headline, `driver_queries.flagship_tiles` over the
+    full events table: geotag → PIP join → degree tiles + cells →
+    per-(polygon, tile) aggregate."""
     from gotrackmaster_spark import driver_queries as Q
-    from gotrackmaster_spark.functions.cells import cell_col
-    from gotrackmaster_spark.functions.tiles import tile_name_col
-    from gotrackmaster_spark.operators.spatial import point_in_polygon_join
 
     pts = Q.geo_events(spark, sf_dir).select("event_id", "user_id", "lat", "lon")
-    polys = Q.rect_polygons(spark, sf_dir)
-    hits = point_in_polygon_join(pts, polys, level=7)
-    return (
-        hits.withColumn("tile", tile_name_col(F.col("lat"), F.col("lon"), 1.0))
-        .withColumn("cell5", F.shiftright(cell_col(F.col("lat"), F.col("lon"), 12), 14))
-        .groupBy("poly_id", "tile")
-        .agg(F.count("*").alias("n_points"), F.countDistinct("cell5").alias("n_cells"))
-    )
+    return Q.flagship_tiles(pts, Q.rect_polygons(spark, sf_dir)).drop("n_tracks")
 
 
 def _image_decode(spark, sf_dir):
@@ -237,7 +226,6 @@ def _scaling_job(spark, sf_dir):
     from gotrackmaster_spark import driver_queries as Q
     from gotrackmaster_spark.functions.cells import cell_col
     from gotrackmaster_spark.functions.tiles import tile_name_col
-    from gotrackmaster_spark.operators.spatial import point_in_polygon_join
 
     base_rows = spark.read.parquet(f"{sf_dir}/events.parquet").count()
     n = base_rows * _SCALE_FACTOR
@@ -261,14 +249,7 @@ def _scaling_job(spark, sf_dir):
         F.count("*").alias("n_points"), F.countDistinct("cell5").alias("n_cells")
     )
     # … and the PIP JOIN half over the same points
-    polys = Q.rect_polygons(spark, sf_dir)
-    hits = point_in_polygon_join(pts, polys, level=7)
-    pip_agg = (
-        hits.withColumn("tile", tile_name_col(F.col("lat"), F.col("lon"), 1.0))
-        .withColumn("cell5", F.shiftright(cell_col(F.col("lat"), F.col("lon"), 12), 14))
-        .groupBy("poly_id", "tile")
-        .agg(F.count("*").alias("n_points"), F.countDistinct("cell5").alias("n_cells"))
-    )
+    pip_agg = Q.flagship_tiles(pts, Q.rect_polygons(spark, sf_dir))
     both = tile_agg.select(
         F.concat(F.lit("t:"), F.col("tile"), F.lit("/"), F.col("tile05")).alias("key"),
         "n_points", "n_cells",

@@ -363,6 +363,26 @@ FROM events GROUP BY 1
 """
 
 
+def flagship_tiles(points: DataFrame, polygons: DataFrame) -> DataFrame:
+    """The flagship job: PIP hits of ``points(user_id, lat, lon)`` (Z level
+    7) → 1° tile + level-5 cell → per-``(poly_id, tile)`` ``n_points``,
+    ``n_cells``, ``n_tracks``.  Catalyst prunes an unselected distinct
+    count, so dropping ``n_tracks`` costs nothing."""
+    from gotrackmaster_spark.operators.spatial import point_in_polygon_join
+
+    hits = point_in_polygon_join(points, polygons, level=7)
+    return (
+        hits.withColumn("tile", tile_name_col(F.col("lat"), F.col("lon"), 1.0))
+        .withColumn("cell5", F.shiftright(cell_col(F.col("lat"), F.col("lon"), 12), 14))
+        .groupBy("poly_id", "tile")
+        .agg(
+            F.count("*").alias("n_points"),
+            F.countDistinct("cell5").alias("n_cells"),
+            F.countDistinct("user_id").alias("n_tracks"),
+        )
+    )
+
+
 def q_pip_counts(spark, sf_dir):
     from gotrackmaster_spark.operators.spatial import point_in_polygon_join
 
@@ -608,24 +628,29 @@ WHERE {_TRAJ_J_DEN} * i.n_shared >= {_TRAJ_J_NUM} * (sa.sz + sb.sz - i.n_shared)
 _KNN_K = 5
 
 
-def q_knn(spark, sf_dir):
+def _q_knn(spark, sf_dir, query_mod: int, k: int, **knn_kw):
+    """The k nearest events of each event with ``event_id % 100 ==
+    query_mod``; ``knn_kw`` picks the `knn_join` lattice and join."""
     import pyarrow.parquet as pq
 
     from gotrackmaster_spark.operators.spatial import knn_join
 
     pts = geo_events(spark, sf_dir)
     data = pts.select(F.col("event_id").alias("data_id"), "lat", "lon")
-    qs = pts.filter(F.col("event_id") % 100 == 3).select(
+    qs = pts.filter(F.col("event_id") % 100 == query_mod).select(
         F.col("event_id").alias("query_id"), "lat", "lon"
     )
     # density sizing from the parquet footer — no extra Spark pass
     n_data = pq.ParquetFile(f"{sf_dir}/events.parquet").metadata.num_rows
-    out = knn_join(qs, data, k=_KNN_K, level=7, ring=2, exclude_self=True,
-                   n_data=n_data)
+    out = knn_join(qs, data, k=k, exclude_self=True, n_data=n_data, **knn_kw)
     return out.select(
         "query_id", "data_id", F.col("rank").alias("rnk"),
         F.round("dist_m", 3).alias("dist_r"),
     )
+
+
+def q_knn(spark, sf_dir):
+    return _q_knn(spark, sf_dir, 3, _KNN_K, level=7, ring=2)
 
 
 _KNN_HEX_K = 4
@@ -635,28 +660,15 @@ def q_knn_hex(spark, sf_dir):
     """E3b — kNN via H3-style hex k-ring expansion with SORT-MERGE
     refinement (the north star's literal operator).  Exact: seam/polar
     queries fall back to the bounded brute-force phase."""
-    import pyarrow.parquet as pq
-
-    from gotrackmaster_spark.operators.spatial import hex_knn_join
-
-    pts = geo_events(spark, sf_dir)
-    data = pts.select(F.col("event_id").alias("data_id"), "lat", "lon")
-    qs = pts.filter(F.col("event_id") % 100 == 7).select(
-        F.col("event_id").alias("query_id"), "lat", "lon"
-    )
-    n_data = pq.ParquetFile(f"{sf_dir}/events.parquet").metadata.num_rows
-    out = hex_knn_join(qs, data, k=_KNN_HEX_K, res=3, ring=1,
-                       exclude_self=True, n_data=n_data)
-    return out.select(
-        "query_id", "data_id", F.col("rank").alias("rnk"),
-        F.round("dist_m", 3).alias("dist_r"),
-    )
+    return _q_knn(spark, sf_dir, 7, _KNN_HEX_K, level=3, ring=1, grid="hex",
+                  broadcast_queries=False)
 
 
-SQL_KNN_HEX = f"""
+def _sql_knn(query_mod: int, k: int) -> str:
+    return f"""
 WITH {GEO_CTE},
 q AS (SELECT event_id AS query_id, lat AS q_lat, lon AS q_lon FROM geo
-      WHERE event_id % 100 = 7),
+      WHERE event_id % 100 = {query_mod}),
 d AS (SELECT event_id AS data_id, lat AS d_lat, lon AS d_lon FROM geo),
 pairs AS (
   SELECT query_id, data_id,
@@ -669,28 +681,12 @@ ranked AS (
   FROM pairs
 )
 SELECT query_id, data_id, CAST(rn AS INT) AS rnk, dist_r
-FROM ranked WHERE rn <= {_KNN_HEX_K}
+FROM ranked WHERE rn <= {k}
 """
 
 
-SQL_KNN = f"""
-WITH {GEO_CTE},
-q AS (SELECT event_id AS query_id, lat AS q_lat, lon AS q_lon FROM geo
-      WHERE event_id % 100 = 3),
-d AS (SELECT event_id AS data_id, lat AS d_lat, lon AS d_lon FROM geo),
-pairs AS (
-  SELECT query_id, data_id,
-         round({haversine_sql('q_lat', 'q_lon', 'd_lat', 'd_lon')}, 3) AS dist_r
-  FROM q CROSS JOIN d WHERE data_id <> query_id
-),
-ranked AS (
-  SELECT query_id, data_id, dist_r,
-         row_number() OVER (PARTITION BY query_id ORDER BY dist_r, data_id) AS rn
-  FROM pairs
-)
-SELECT query_id, data_id, CAST(rn AS INT) AS rnk, dist_r
-FROM ranked WHERE rn <= {_KNN_K}
-"""
+SQL_KNN_HEX = _sql_knn(7, _KNN_HEX_K)
+SQL_KNN = _sql_knn(3, _KNN_K)
 
 
 # --------------------------------------------------------------------------
@@ -3107,6 +3103,7 @@ GROUP BY 1
 
 
 __all__ = [
+    "flagship_tiles",
     "GO_ZERO_US",
     "q_leg_haversine_sum",
     "SQL_LEG_HAVERSINE_SUM",
@@ -3145,9 +3142,11 @@ __all__ = [
     "q_trajectory_jaccard",
     "SQL_TRAJECTORY_JACCARD",
     "_KNN_K",
+    "_q_knn",
     "q_knn",
     "_KNN_HEX_K",
     "q_knn_hex",
+    "_sql_knn",
     "SQL_KNN_HEX",
     "SQL_KNN",
     "_DUP_SECONDS",

@@ -17,9 +17,13 @@ mask-shift; quantization is ``floor((lon+180)/360 * 2^L)`` clamped.
 
 Neighbor/k-ring math (for kNN, E3) is numpy-only: decode -> (i, j) ->
 Chebyshev ring with lon wraparound and lat clamping -> re-encode.
+
+``ZGrid`` is one level as ``operators.spatial``'s joins use it.
 """
 
 from __future__ import annotations
+
+import math
 
 import numpy as np
 from pyspark.sql import Column
@@ -118,6 +122,59 @@ def k_ring_np(cell: np.ndarray, k: int) -> np.ndarray:
     jj = np.clip(j[:, None] + dj.ravel()[None, :], 0, n - 1)
     marker = np.int64(1) << np.int64(2 * level)
     return marker | _spread_np(ii) | (_spread_np(jj) << 1)
+
+
+_R = 6371000.0
+_M_PER_DEG = math.pi * _R / 180.0  # meridian meters/degree on the R=6371km sphere
+
+
+class ZGrid:
+    """The Z-order lattice at one ``level`` for the cell-bucketed joins:
+    cell ids, k-rings, a bbox's candidate cells, the kNN ring guarantee."""
+
+    def __init__(self, level: int):
+        self.level = level
+
+    def cell_col(self, lat: Column, lon: Column) -> Column:
+        return cell_col(lat, lon, self.level)
+
+    def cell_np(self, lat, lon) -> np.ndarray:
+        return cell_np(lat, lon, self.level)
+
+    k_ring_np = staticmethod(k_ring_np)
+
+    def bbox_cells(self, lat_min: float, lat_max: float, lon_min: float, lon_max: float):
+        """The cells meeting a lat/lon bbox: ``(cells, (lat_lo, lat_hi,
+        lon_lo, lon_hi), probes)`` — each cell's bounds, and its 4 corners,
+        which must all be inside a polygon for the cell to be full."""
+        n = 1 << self.level
+        i, j = quantize_np(np.array([lat_min, lat_max]), np.array([lon_min, lon_max]), self.level)
+        ii, jj = np.meshgrid(np.arange(i[0], i[1] + 1), np.arange(j[0], j[1] + 1), indexing="ij")
+        ii, jj = ii.ravel(), jj.ravel()
+        lon_lo = -180.0 + 360.0 * ii / n
+        lon_hi = -180.0 + 360.0 * (ii + 1) / n
+        lat_lo = -90.0 + 180.0 * jj / n
+        lat_hi = -90.0 + 180.0 * (jj + 1) / n
+        probes = [(lat_lo, lon_lo), (lat_lo, lon_hi), (lat_hi, lon_lo), (lat_hi, lon_hi)]
+        return cell_from_ij_np(ii, jj, self.level), (lat_lo, lat_hi, lon_lo, lon_hi), probes
+
+    def guarantee(self, abs_lat_deg: np.ndarray, r: int) -> np.ndarray:
+        """EXACT lower bound on the distance from a query at |lat| to any
+        point outside its (2r+1)² block: points beyond r cells in latitude
+        are ≥ r·lat_cell_m away (meridian arc); points within r lat-cells
+        but beyond r lon-cells satisfy cosφ₁,cosφ₂ ≥ cos(φ_worst) so
+        haversine ≥ 2R·asin(cos φ_worst · sin(r·Δλ/2))."""
+        lat_cell_deg = 180.0 / (1 << self.level)
+        lon_cell_deg = 360.0 / (1 << self.level)
+        worst = np.minimum(90.0, abs_lat_deg + (r + 1) * lat_cell_deg)
+        d_lat = r * (lat_cell_deg * _M_PER_DEG)
+        half = np.minimum(r * math.radians(lon_cell_deg) / 2.0, math.pi / 2)
+        d_lon = 2.0 * _R * np.arcsin(np.cos(np.radians(worst)) * np.sin(half))
+        return np.minimum(d_lat, d_lon)
+
+    def clamp(self, g: np.ndarray, lat: np.ndarray, lon: np.ndarray) -> np.ndarray:
+        """The guarantee needs no clamp: k-rings wrap at ±180°."""
+        return g
 
 
 # ---------------------------------------------------------------- Column ---

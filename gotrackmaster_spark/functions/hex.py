@@ -25,6 +25,8 @@ the DuckDB oracle reproduces Spark bit-for-bit:
 The grid is planar (no antimeridian wrap): hexes are assignment buckets
 for grouping/joining, mirroring how the degree tiles (T1) behave at the
 ±180 seam.
+
+``HexGrid`` is one resolution as ``operators.spatial``'s joins use it.
 """
 
 from __future__ import annotations
@@ -34,6 +36,8 @@ import math
 import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from gotrackmaster_spark.functions.cells import _M_PER_DEG, _R
 
 _SQRT3_3 = math.sqrt(3.0) / 3.0  # √3/3
 _THIRD = 1.0 / 3.0
@@ -131,6 +135,90 @@ def hex_distance_np(a, b) -> np.ndarray:
     qb, rb, _ = hex_to_qr_np(b)
     dq, dr = qa - qb, ra - rb
     return (np.abs(dq) + np.abs(dr) + np.abs(-dq - dr)) // 2
+
+
+class HexGrid:
+    """The hex lattice at resolution ``res`` for the cell-bucketed joins;
+    the twin of ``functions.cells.ZGrid``."""
+
+    def __init__(self, res: int):
+        self.res = res
+        self.size = SIZES[res]
+
+    def cell_col(self, lat: Column, lon: Column) -> Column:
+        return hex_col(lat, lon, self.res)
+
+    def cell_np(self, lat, lon) -> np.ndarray:
+        return hex_np(lat, lon, self.res)
+
+    k_ring_np = staticmethod(hex_kring_np)
+
+    def bbox_cells(self, lat_min: float, lat_max: float, lon_min: float, lon_max: float):
+        """H3-style polyfill of a lat/lon bbox, shaped as `ZGrid.bbox_cells`:
+        the hexes whose own bbox (pointy-top: center ± (√3/2·s, s)) overlaps
+        it, probed at the center and 6 corners.  Cube-rounding assignment
+        (`hex_np`) is the Voronoi of the lattice, so any hex holding a point
+        of the bbox qualifies."""
+        s = self.size
+        rt3 = math.sqrt(3.0)
+        half_w = rt3 / 2.0 * s  # hex bbox half-width; half-height is s
+        r0 = int(math.floor((lat_min - s) / (1.5 * s)))
+        r1 = int(math.ceil((lat_max + s) / (1.5 * s)))
+
+        def q_of(lon, r):
+            return lon / (rt3 * s) - r / 2.0
+
+        q0 = int(math.floor(min(q_of(lon_min - s, r0), q_of(lon_min - s, r1))))
+        q1 = int(math.ceil(max(q_of(lon_max + s, r0), q_of(lon_max + s, r1))))
+        qq, rr = np.meshgrid(np.arange(q0, q1 + 1), np.arange(r0, r1 + 1), indexing="ij")
+        qq, rr = qq.ravel(), rr.ravel()
+        cy = 1.5 * rr * s
+        cx = rt3 * (qq + rr / 2.0) * s
+        keep = (
+            (cx - half_w <= lon_max) & (cx + half_w >= lon_min)
+            & (cy - s <= lat_max) & (cy + s >= lat_min)
+        )
+        qq, rr, cx, cy = qq[keep], rr[keep], cx[keep], cy[keep]
+        probes = [
+            (cy, cx),
+            (cy + s, cx), (cy - s, cx),
+            (cy + s / 2.0, cx + half_w), (cy - s / 2.0, cx + half_w),
+            (cy + s / 2.0, cx - half_w), (cy - s / 2.0, cx - half_w),
+        ]
+        box = (cy - s, cy + s, cx - half_w, cx + half_w)
+        return hex_from_qr_np(qq, rr, self.res), box, probes
+
+    def guarantee(self, abs_lat_deg: np.ndarray, r: int) -> np.ndarray:
+        """EXACT lower bound on the distance from a query at |lat| to any
+        point outside its hex k-ring, on the planar lattice: the hexes at
+        grid distance ≤ r form a large hexagon of inradius ≥ (3/2)·s·r
+        (center spacing 2a = √3·s, big-hex inradius r·√3·a), so a point in
+        a hex at grid distance > r lies at plane (degree-space) distance
+        ≥ ρ = s·(1.5·(r+1) − 2) from every point of the query hex.  The
+        offset's larger component is ≥ ρ/√2, giving
+        ``min(ρ/√2·M_PER_DEG, 2R·asin(cos φw · sin(ρ/√2 / 2)))`` with
+        φw = min(90°, |lat| + ρ/√2) — the case split of `ZGrid.guarantee`."""
+        rho = self.size * (1.5 * (r + 1.0) - 2.0)  # plane lower bound, degrees
+        if rho <= 0.0:
+            return np.zeros_like(abs_lat_deg)
+        comp = rho / math.sqrt(2.0)
+        d_lat = comp * _M_PER_DEG
+        worst = np.minimum(90.0, abs_lat_deg + comp)
+        half = min(math.radians(comp) / 2.0, math.pi / 2.0)
+        d_lon = 2.0 * _R * np.arcsin(np.cos(np.radians(worst)) * math.sin(half))
+        return np.minimum(d_lat, d_lon)
+
+    def clamp(self, g: np.ndarray, lat: np.ndarray, lon: np.ndarray) -> np.ndarray:
+        """The lattice does not wrap at ±180°: points just across the seam
+        are spherically close but in plane-distant hexes.  Clamp the
+        guarantee by the spherical distance to the seam meridian,
+        ``R·asin(cos φ · sin(min(g, 90°)))`` with g = 180° − |lon|
+        (cross-track distance; any cross-seam point has lon separation
+        ≥ g), so seam-adjacent kNN queries fall back to brute force."""
+        g_seam = np.radians(np.minimum(180.0 - np.abs(lon), 90.0))
+        return np.minimum(
+            g, _R * np.arcsin(np.cos(np.radians(np.abs(lat))) * np.sin(g_seam))
+        )
 
 
 # ---------------------------------------------------------------- Column ---

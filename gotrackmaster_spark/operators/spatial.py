@@ -5,9 +5,15 @@ Design notes (SURVEY.md §2.10, §4.2):
 
 * All joins are **cell-bucketed equi-joins** on the hierarchical Z-order cell
   IDs from ``functions.cells`` — candidate generation is a broadcast or
-  shuffle hash join on ``cell``; exact geometry refinement happens after, on
+  shuffle join on ``cell``; exact geometry refinement happens after, on
   the (much smaller) candidate set — a Catalyst ray cast for PIP, vectorized
   numpy for the rest.
+* One covering (`polygon_covering`) and one kNN (`knn_join`) serve both
+  lattices: their ``grid`` argument (``"z"`` or ``"hex"``) picks a grid
+  object in `_grid` — ``functions.cells.ZGrid`` or ``functions.hex.HexGrid``
+  — which carries everything lattice-specific (cell ids, k-rings, the
+  candidate cells of a bbox with their full-cell probes, the kNN ring
+  guarantee and its clamp).  The operators never branch on the grid.
 * The covering / k-ring sides are *small* relative to the points side
   (polygon layers, query sets, per-track summaries), so they are
   ``broadcast()`` explicitly; the points side is never shuffled for these
@@ -38,70 +44,59 @@ from pyspark.sql import functions as F
 _LOG = logging.getLogger(__name__)
 
 from gotrackmaster_spark.caching import make_bounded_cache
-from gotrackmaster_spark.functions.cells import (
-    cell_col,
-    cell_np,
-    k_ring_np,
-)
+from gotrackmaster_spark.functions.cells import ZGrid, cell_col, cell_np, k_ring_np
 from gotrackmaster_spark.functions.geodesy import (
     EARTH_RADIUS,
     haversine_col,
     haversine_np,
 )
 from gotrackmaster_spark.functions.geometry import ray_cast_col
+from gotrackmaster_spark.functions.hex import HexGrid
 from gotrackmaster_spark.session import local_frame
 
 
 # --------------------------------------------------------------- E2: PIP ---
 
-def polygon_covering(polygons: DataFrame, level: int) -> DataFrame:
-    """Explode each polygon into its packed cell covering at ``level``:
-    one row per cell of the polygon's bbox, classified ``full`` (cell
-    entirely inside the polygon → join accepts immediately, no refine) or
-    boundary (ray-cast refine required).
+_GRIDS = {"z": ZGrid, "hex": HexGrid}
+
+
+def _grid(name: str, level: int):
+    """The lattice of a cell-bucketed join: ``"z"`` is the Z-order grid at
+    ``level``, ``"hex"`` the hex grid at resolution ``level``."""
+    if name not in _GRIDS:
+        raise ValueError(f"grid must be 'z' or 'hex', got {name!r}")
+    return _GRIDS[name](level)
+
+
+def polygon_covering(polygons: DataFrame, level: int, grid: str = "z") -> DataFrame:
+    """Explode each polygon into its packed cell covering at ``level`` of
+    ``grid`` (`_grid`): one row per cell meeting the polygon's bbox,
+    classified ``full`` (cell entirely inside the polygon → join accepts
+    immediately, no refine) or boundary (ray-cast refine required).
 
     Input: ``polygons(poly_id, ring: array<struct<lat,lon>>)``.
     Output: ``(cell: long, poly_id, full: boolean, ring)``.
 
-    ``full`` classification is conservative: a cell is full iff all 4 of
-    its corners are inside AND no ring vertex lies inside the cell AND no
-    ring edge's bbox overlaps the cell (an edge crossing a cell always
-    overlaps its bbox) — false negatives only cost a refine pass.
+    ``full`` classification is conservative: a cell is full iff all of its
+    probes are inside (the 4 corners of a Z cell; the center and 6 corners
+    of a hex) AND no ring edge's bbox overlaps the cell's bbox (a vertex
+    inside the cell or an edge crossing it always overlaps) — false
+    negatives only cost a refine pass.
     """
+    g = _grid(grid, level)
+
     def gen(batches):
         for pdf in batches:
             out = {"cell": [], "poly_id": [], "full": [], "ring": []}
             for pid, ring in zip(pdf["poly_id"], pdf["ring"]):
                 rl = np.array([p["lat"] for p in ring])
                 rx = np.array([p["lon"] for p in ring])
-                n = 1 << level
-                i0 = int(np.clip(math.floor((rx.min() + 180.0) / 360.0 * n), 0, n - 1))
-                i1 = int(np.clip(math.floor((rx.max() + 180.0) / 360.0 * n), 0, n - 1))
-                j0 = int(np.clip(math.floor((rl.min() + 90.0) / 180.0 * n), 0, n - 1))
-                j1 = int(np.clip(math.floor((rl.max() + 90.0) / 180.0 * n), 0, n - 1))
-                ii, jj = np.meshgrid(
-                    np.arange(i0, i1 + 1, dtype=np.int64),
-                    np.arange(j0, j1 + 1, dtype=np.int64),
-                    indexing="ij",
+                cells, (lat_lo, lat_hi, lon_lo, lon_hi), probes = g.bbox_cells(
+                    rl.min(), rl.max(), rx.min(), rx.max()
                 )
-                ii = ii.ravel()
-                jj = jj.ravel()
-                from gotrackmaster_spark.functions.cells import cell_from_ij_np
-
-                cells = cell_from_ij_np(ii, jj, level)
-                # cell bounds
-                lon_lo = -180.0 + 360.0 * ii / n
-                lon_hi = -180.0 + 360.0 * (ii + 1) / n
-                lat_lo = -90.0 + 180.0 * jj / n
-                lat_hi = -90.0 + 180.0 * (jj + 1) / n
-                # all 4 corners inside?
-                corners_in = (
-                    _ray_cast_np(lat_lo, lon_lo, rl, rx)
-                    & _ray_cast_np(lat_lo, lon_hi, rl, rx)
-                    & _ray_cast_np(lat_hi, lon_lo, rl, rx)
-                    & _ray_cast_np(lat_hi, lon_hi, rl, rx)
-                )
-                # any ring edge bbox overlapping the cell?
+                corners_in = np.ones(len(cells), dtype=bool)
+                for la, lo in probes:
+                    corners_in &= _ray_cast_np(la, lo, rl, rx)
                 e_lat_lo = np.minimum(rl, np.roll(rl, 1))
                 e_lat_hi = np.maximum(rl, np.roll(rl, 1))
                 e_lon_lo = np.minimum(rx, np.roll(rx, 1))
@@ -111,91 +106,6 @@ def polygon_covering(polygons: DataFrame, level: int) -> DataFrame:
                     & (e_lat_hi[None, :] >= lat_lo[:, None])
                     & (e_lon_lo[None, :] <= lon_hi[:, None])
                     & (e_lon_hi[None, :] >= lon_lo[:, None])
-                ).any(axis=1)
-                full = corners_in & ~overlap
-                out["cell"].extend(cells.tolist())
-                out["poly_id"].extend([pid] * len(cells))
-                out["full"].extend(full.tolist())
-                out["ring"].extend([ring] * len(cells))
-            yield pd.DataFrame(out)
-
-    schema = (
-        "cell long, poly_id string, full boolean, "
-        "ring array<struct<lat:double,lon:double>>"
-    )
-    return polygons.mapInPandas(gen, schema)
-
-
-def hex_polygon_covering(polygons: DataFrame, res: int) -> DataFrame:
-    """H3-style "polyfill": explode each polygon into the hex cells of its
-    bbox at resolution ``res``, classified full/boundary with the SAME
-    conservative rule as `polygon_covering`, on hex geometry: a hex is
-    ``full`` iff its center and all 6 corners are inside AND no ring
-    edge's bbox overlaps the hex's bbox (pointy-top: center ± (√3/2·s, s)).
-    Candidate hexes are those whose bbox overlaps the polygon bbox —
-    cube-rounding assignment (`hex_np`) is the Voronoi of the hex lattice,
-    so any hex containing an inside point necessarily qualifies: no
-    misses, false boundaries only cost a refine pass.
-
-    Output: ``(cell long, poly_id, full boolean, ring)`` — drop-in for
-    the covering side of `point_in_polygon_join`.
-    """
-    from gotrackmaster_spark.functions.hex import SIZES, hex_from_qr_np
-
-    s = SIZES[res]
-    rt3 = math.sqrt(3.0)
-    half_w = rt3 / 2.0 * s  # hex bbox half-width; half-height is s
-
-    def gen(batches):
-        for pdf in batches:
-            out = {"cell": [], "poly_id": [], "full": [], "ring": []}
-            for pid, ring in zip(pdf["poly_id"], pdf["ring"]):
-                rl = np.array([p["lat"] for p in ring])
-                rx = np.array([p["lon"] for p in ring])
-                lat_lo, lat_hi = rl.min(), rl.max()
-                lon_lo, lon_hi = rx.min(), rx.max()
-                r0 = int(math.floor((lat_lo - s) / (1.5 * s)))
-                r1 = int(math.ceil((lat_hi + s) / (1.5 * s)))
-
-                def q_of(lon, r):
-                    return lon / (rt3 * s) - r / 2.0
-
-                q0 = int(math.floor(min(q_of(lon_lo - s, r0), q_of(lon_lo - s, r1))))
-                q1 = int(math.ceil(max(q_of(lon_hi + s, r0), q_of(lon_hi + s, r1))))
-                qq, rr = np.meshgrid(
-                    np.arange(q0, q1 + 1, dtype=np.int64),
-                    np.arange(r0, r1 + 1, dtype=np.int64),
-                    indexing="ij",
-                )
-                qq = qq.ravel()
-                rr = rr.ravel()
-                cy = 1.5 * rr * s
-                cx = rt3 * (qq + rr / 2.0) * s
-                keep = (
-                    (cx - half_w <= lon_hi) & (cx + half_w >= lon_lo)
-                    & (cy - s <= lat_hi) & (cy + s >= lat_lo)
-                )
-                qq, rr, cx, cy = qq[keep], rr[keep], cx[keep], cy[keep]
-                cells = hex_from_qr_np(qq, rr, res)
-                # center + 6 pointy-top corners inside?
-                corners = [
-                    (cy, cx),
-                    (cy + s, cx), (cy - s, cx),
-                    (cy + s / 2.0, cx + half_w), (cy - s / 2.0, cx + half_w),
-                    (cy + s / 2.0, cx - half_w), (cy - s / 2.0, cx - half_w),
-                ]
-                corners_in = np.ones(len(cx), dtype=bool)
-                for la, lo in corners:
-                    corners_in &= _ray_cast_np(la, lo, rl, rx)
-                e_lat_lo = np.minimum(rl, np.roll(rl, 1))
-                e_lat_hi = np.maximum(rl, np.roll(rl, 1))
-                e_lon_lo = np.minimum(rx, np.roll(rx, 1))
-                e_lon_hi = np.maximum(rx, np.roll(rx, 1))
-                overlap = (
-                    (e_lat_lo[None, :] <= (cy + s)[:, None])
-                    & (e_lat_hi[None, :] >= (cy - s)[:, None])
-                    & (e_lon_lo[None, :] <= (cx + half_w)[:, None])
-                    & (e_lon_hi[None, :] >= (cx - half_w)[:, None])
                 ).any(axis=1)
                 full = corners_in & ~overlap
                 out["cell"].extend(cells.tolist())
@@ -263,25 +173,13 @@ def point_in_polygon_join(
     are identical; only the exchange strategy changes.
 
     ``grid="hex"`` runs the identical plan on the hexagonal lattice
-    (`hex_polygon_covering` + `functions.hex.hex_col`, ``level`` = hex
-    resolution) — results are grid-independent (pinned in tests).
+    (``level`` = hex resolution) — results are grid-independent (pinned
+    in tests).
     """
-    if grid not in ("z", "hex"):
-        raise ValueError(f"grid must be 'z' or 'hex', got {grid!r}")
+    g = _grid(grid, level)
     lat_c, lon_c = point_cols
-    if grid == "hex":
-        from gotrackmaster_spark.functions.hex import hex_col
-
-        cov = hex_polygon_covering(polygons, level)
-        pts = points.withColumn(
-            "cell", hex_col(F.col(lat_c), F.col(lon_c), level)
-        )
-    else:
-        cov = polygon_covering(polygons, level)
-        pts = points.withColumn(
-            "cell", cell_col(F.col(lat_c), F.col(lon_c), level)
-        )
-    cov = _with_ring_lat_band(cov)
+    cov = _with_ring_lat_band(polygon_covering(polygons, level, grid))
+    pts = points.withColumn("cell", g.cell_col(F.col(lat_c), F.col(lon_c)))
     if broadcast_covering:
         cand = pts.join(F.broadcast(cov), "cell", "inner")
     else:
@@ -478,46 +376,57 @@ def point_in_polygon_anti(
 
 # --------------------------------------------------------------- E3: kNN ---
 
-_M_PER_DEG = math.pi * 6371000.0 / 180.0  # meridian meters/degree on the R=6371km sphere
-
-
 # cache slots with bounded lifetime (policy: caching.py)
 _bound_knn_cache = make_bounded_cache()  # previous call's persisted top-k
 _bound_dup_cache = make_bounded_cache()  # previous duplicate call's summaries
 
 
-def _knn_phase1(
+def knn_join(
     queries: DataFrame,
     data: DataFrame,
-    *,
     k: int,
-    n_data: int | None,
-    query_id: str,
-    data_id: str,
-    round_decimals: int,
-    ring: int,
-    cell_fn,
-    kring_fn,
-    guarantee_fn,
-    clamp_fn=None,
-    max_ring: int = 8,
-):
-    """Shared phase 1 of the kNN operators (`knn_join`, `hex_knn_join`):
-    project the two sides, size the expected k-NN radius from the global
-    density, and explode each query to its ADAPTIVE ring of grid cells
-    (the smallest ring in [ring, max_ring] whose exact guarantee covers
-    the target radius).  The lattice is injected: ``cell_fn(lat, lon)``
-    assigns cells, ``kring_fn(cells, r)`` enumerates the ring,
-    ``guarantee_fn(abs_lat, r)`` lower-bounds the ground distance to any
-    point outside the ring, and the optional ``clamp_fn(g, qlat, qlon)``
-    tightens it for lattice-specific blind spots (the hex seam).
+    level: int = 6,
+    ring: int = 1,
+    query_id: str = "query_id",
+    data_id: str = "data_id",
+    round_decimals: int = 3,
+    exclude_self: bool = False,
+    n_data: int | None = None,
+    broadcast_queries: bool = True,
+    grid: str = "z",
+) -> DataFrame:
+    """E3 — exact k nearest neighbours of each query point, on the Z-order
+    (``grid="z"``, cells at ``level``) or hex (``grid="hex"``, resolution
+    ``level``) lattice (`_grid`).
 
-    Returns ``(q, d, q_ring, target_m, qid_type)``.
+    Two-phase: (1) k-ring candidate pass — each query explodes to its
+    ADAPTIVE ring (the smallest in [ring, 8] whose grid ``guarantee``
+    covers the expected k-NN radius of the global density), equi-joined
+    to data on cell, refined with exact Haversine, per-query top-k;
+    (2) exact fallback — any query whose ring produced < k candidates or
+    whose k-th distance exceeds the ring's clamped guarantee (no point
+    outside the ring is nearer) is re-run as a brute force against the
+    full data set.  Results are exact for any grid/level/ring; sizing
+    them to the density just empties phase 2.
+
+    The candidate join broadcasts the (small) exploded query side; the
+    data side never shuffles.  ``broadcast_queries=False``, for ring sets
+    too large for one executor, makes it a SORT-MERGE join on the cell
+    key — same results (`q_knn_hex`: the north star's "k-ring expansion
+    with sort-merge refinement").
 
     ``n_data`` only sizes the target radius — pass a (rough) row count or
     density estimate to skip the extra full pass over the big side;
     parquet footer counts are free.
+
+    Ranking is by (round(dist_m, round_decimals), data_id) so that an
+    external oracle computing the same rounded metric ranks identically
+    despite last-ULP libm differences.
+
+    Output: (query_id, data_id, dist_m, rank).
     """
+    g = _grid(grid, level)
+    max_ring = 8
     q = queries.select(query_id, F.col("lat").alias("q_lat"), F.col("lon").alias("q_lon"))
     d = data.select(data_id, F.col("lat").alias("d_lat"), F.col("lon").alias("d_lon"))
     # single-file parquet sources arrive as 1 input split — spread the data
@@ -539,22 +448,21 @@ def _knn_phase1(
             qlat = pdf["q_lat"].to_numpy()
             qlon = pdf["q_lon"].to_numpy()
             abs_lat = np.abs(qlat)
-            # smallest ring whose exact guarantee covers the target radius
+            # smallest ring whose exact (unclamped) guarantee covers the
+            # target radius
             r = np.full(len(pdf), max_ring, dtype=np.int64)
             for rv in range(max_ring - 1, ring - 1, -1):
-                r = np.where(guarantee_fn(abs_lat, rv) >= target_m, rv, r)
-            g = np.zeros(len(pdf))
+                r = np.where(g.guarantee(abs_lat, rv) >= target_m, rv, r)
+            gm = np.zeros(len(pdf))
             for rv in np.unique(r):
                 m = r == rv
-                g[m] = guarantee_fn(abs_lat[m], int(rv))
-            if clamp_fn is not None:
-                g = clamp_fn(g, qlat, qlon)
-            guarantee = g - 10.0 ** (-round_decimals)
-            cells = cell_fn(qlat, qlon)
+                gm[m] = g.guarantee(abs_lat[m], int(rv))
+            guarantee = g.clamp(gm, qlat, qlon) - 10.0 ** (-round_decimals)
+            cells = g.cell_np(qlat, qlon)
             frames = []
             for rv in np.unique(r):
                 m = r == rv
-                rc = kring_fn(cells[m], int(rv))
+                rc = g.k_ring_np(cells[m], int(rv))
                 nm, mm = rc.shape
                 frames.append(
                     pd.DataFrame(
@@ -577,80 +485,17 @@ def _knn_phase1(
         explode_ring,
         f"{query_id} {qid_type}, q_lat double, q_lon double, guarantee_m double, cell long",
     )
-    return q, d, q_ring, target_m, qid_type
-
-
-def knn_join(
-    queries: DataFrame,
-    data: DataFrame,
-    k: int,
-    level: int = 6,
-    ring: int = 1,
-    query_id: str = "query_id",
-    data_id: str = "data_id",
-    round_decimals: int = 3,
-    exclude_self: bool = False,
-    n_data: int | None = None,
-    broadcast_queries: bool = True,
-) -> DataFrame:
-    """E3 — exact k nearest neighbours of each query point.
-
-    Two-phase: (1) k-ring candidate pass — queries exploded to their
-    (2·ring+1)² neighbour cells at ``level``, equi-joined to data on cell,
-    refined with exact Haversine, per-query top-k; (2) exact fallback — any
-    query whose ring either produced < k candidates or whose k-th distance
-    exceeds the ring's guarantee radius (the distance below which NO point
-    outside the ring block can lie) is re-run as a brute force against the
-    full data set.  Results are therefore exact regardless of the
-    ring/level choice; sizing level/ring to the data density just empties
-    phase 2.  At scale the plan is a broadcast of the (small) query side
-    against the cell-partitioned data side — the big side never shuffles.
-
-    Ranking is by (round(dist_m, round_decimals), data_id) so that an
-    external oracle computing the same rounded metric ranks identically
-    despite last-ULP libm differences.
-
-    Output: (query_id, data_id, dist_m, rank).
-    """
-    lat_cell_deg = 180.0 / (1 << level)
-    lon_cell_deg = 360.0 / (1 << level)
-    lat_cell_m = lat_cell_deg * _M_PER_DEG
-    _R = 6371000.0
-
-    def _guarantee(abs_lat_deg: np.ndarray, r) -> np.ndarray:
-        """EXACT lower bound on the distance from a query at |lat| to any
-        point outside its (2r+1)² block: points beyond r cells in latitude
-        are ≥ r·lat_cell_m away (meridian arc); points within r lat-cells
-        but beyond r lon-cells satisfy cosφ₁,cosφ₂ ≥ cos(φ_worst) so
-        haversine ≥ 2R·asin(cos φ_worst · sin(r·Δλ/2))."""
-        worst = np.minimum(90.0, abs_lat_deg + (r + 1) * lat_cell_deg)
-        d_lat = r * lat_cell_m
-        half = np.minimum(r * math.radians(lon_cell_deg) / 2.0, math.pi / 2)
-        d_lon = 2.0 * _R * np.arcsin(np.cos(np.radians(worst)) * np.sin(half))
-        return np.minimum(d_lat, d_lon)
-
-    q, d, q_ring, target_m, qid_type = _knn_phase1(
-        queries, data,
-        k=k, n_data=n_data, query_id=query_id, data_id=data_id,
-        round_decimals=round_decimals, ring=ring,
-        cell_fn=lambda la, lo: cell_np(la, lo, level),
-        kring_fn=k_ring_np,
-        guarantee_fn=_guarantee,
-    )
-    d_cell = d.withColumn("cell", cell_col(F.col("d_lat"), F.col("d_lon"), level))
-    # big-query path (broadcast_queries=False): when the exploded ring set
-    # itself is too large for one executor, shuffle-hash both sides on the
-    # spatially-local cell key instead — same results, one exchange each
+    d_cell = d.withColumn("cell", g.cell_col(F.col("d_lat"), F.col("d_lon")))
     if broadcast_queries:
         cand = d_cell.join(F.broadcast(q_ring), "cell", "inner")
     else:
-        cand = d_cell.join(q_ring.hint("shuffle_hash"), "cell", "inner")
+        cand = d_cell.join(q_ring.hint("merge"), "cell", "inner")
 
     return _rank_with_exact_fallback(
         q, d, cand,
         k=k, query_id=query_id, data_id=data_id, qid_type=qid_type,
         round_decimals=round_decimals, exclude_self=exclude_self,
-        warn_ctx=f"level={level} ring={ring} k={k} target_m={target_m:.0f}",
+        warn_ctx=f"grid={grid} level={level} ring={ring} k={k} target_m={target_m:.0f}",
     )
 
 
@@ -667,10 +512,10 @@ def _rank_with_exact_fallback(
     exclude_self: bool,
     warn_ctx: str = "",
 ) -> DataFrame:
-    """Shared phase 2 of the kNN operators (`knn_join`, `hex_knn_join`):
-    exact-Haversine refinement + per-query top-k over the candidate set,
-    exactness gate against the per-query ``guarantee_m``, and a bounded
-    brute-force pass for under-covered queries.
+    """Phase 2 of `knn_join`: exact-Haversine refinement + per-query top-k
+    over the candidate set, exactness gate against the per-query
+    ``guarantee_m``, and a bounded brute-force pass for under-covered
+    queries.
 
     ``cand`` carries (query_id, data_id, q_lat, q_lon, d_lat, d_lon,
     guarantee_m); ``q``/``d`` are the original (un-exploded) sides used
@@ -764,95 +609,6 @@ def _rank_with_exact_fallback(
         F.broadcast(short.select(query_id)), query_id, "left_anti"
     )
     return good.select(*cols).unionByName(bf_ranked.select(*cols))
-
-
-def hex_knn_join(
-    queries: DataFrame,
-    data: DataFrame,
-    k: int,
-    res: int = 4,
-    ring: int = 1,
-    query_id: str = "query_id",
-    data_id: str = "data_id",
-    round_decimals: int = 3,
-    exclude_self: bool = False,
-    n_data: int | None = None,
-) -> DataFrame:
-    """E3b — exact kNN via H3-style hex k-ring expansion with sort-merge
-    refinement (the north star's literal phrasing: "kNN queries via H3
-    k-ring expansion with sort-merge refinement").
-
-    Same two-phase exactness contract as `knn_join`, on the hexagonal
-    lattice of ``functions.hex``: each query explodes to its hex k-ring
-    (1 + 3r(r+1) cells at resolution ``res``), candidates come from an
-    equi-join on the hex cell ID — executed as a SORT-MERGE join (a
-    ``merge`` hint: both sides exchanged + sorted on the spatially-local
-    cell key, the strategy for query sets whose exploded rings are too
-    large to broadcast) — and refinement is exact Haversine + per-query
-    top-k.
-
-    Exactness guarantee on the planar hex lattice: the set of hexes at
-    grid distance ≤ r around the query's hex is a large hexagon whose
-    inradius is ≥ (3/2)·s·r (center spacing 2a = √3·s, big-hex inradius
-    r·√3·a = (3/2)·s·r), so any point in a hex at grid distance > r lies
-    at plane (degree-space Euclidean) distance ≥ ρ = s·(1.5·(r+1) − 2)
-    from every point of the query hex.  Plane → ground lower bound: the
-    offset's larger component is ≥ ρ/√2, giving
-    ``min(ρ/√2·M_PER_DEG, 2R·asin(cos φw · sin(ρ/√2 / 2)))`` with
-    φw = min(90°, |lat| + ρ/√2) — same case split as `knn_join`'s square
-    guarantee.  Because the hex grid does NOT wrap at ±180° (points just
-    across the seam are spherically close but in plane-distant hexes),
-    the guarantee is additionally clamped by the query's spherical
-    distance to the seam meridian, ``R·asin(cos φ · sin(min(g, 90°)))``
-    with g = 180° − |lon| (cross-track distance to a meridian; any
-    cross-seam point has lon separation ≥ g).  Seam-adjacent queries
-    therefore fall back to the exact brute-force phase — results are
-    exact everywhere, and the fallback count is logged.
-
-    Output: (query_id, data_id, dist_m, rank) — identical to `knn_join`.
-    """
-    from gotrackmaster_spark.functions.hex import SIZES, hex_col, hex_kring_np, hex_np
-
-    size = SIZES[res]
-    _R = 6371000.0
-    _SQRT2 = math.sqrt(2.0)
-
-    def _hex_guarantee(abs_lat_deg: np.ndarray, r: int) -> np.ndarray:
-        rho = size * (1.5 * (r + 1.0) - 2.0)  # plane lower bound, degrees
-        if rho <= 0.0:
-            return np.zeros_like(abs_lat_deg)
-        comp = rho / _SQRT2
-        d_lat = comp * _M_PER_DEG
-        worst = np.minimum(90.0, abs_lat_deg + comp)
-        half = min(math.radians(comp) / 2.0, math.pi / 2.0)
-        d_lon = 2.0 * _R * np.arcsin(np.cos(np.radians(worst)) * math.sin(half))
-        return np.minimum(d_lat, d_lon)
-
-    def _seam_clamp(g, qlat, qlon):
-        # planar lattice, no lon wrap (see docstring)
-        g_seam = np.radians(np.minimum(180.0 - np.abs(qlon), 90.0))
-        return np.minimum(
-            g, _R * np.arcsin(np.cos(np.radians(np.abs(qlat))) * np.sin(g_seam))
-        )
-
-    q, d, q_ring, target_m, qid_type = _knn_phase1(
-        queries, data,
-        k=k, n_data=n_data, query_id=query_id, data_id=data_id,
-        round_decimals=round_decimals, ring=ring,
-        cell_fn=lambda la, lo: hex_np(la, lo, res),
-        kring_fn=hex_kring_np,
-        guarantee_fn=_hex_guarantee,
-        clamp_fn=_seam_clamp,
-    )
-    d_cell = d.withColumn("cell", hex_col(F.col("d_lat"), F.col("d_lon"), res))
-    cand = d_cell.join(q_ring.hint("merge"), "cell", "inner")
-
-    return _rank_with_exact_fallback(
-        q, d, cand,
-        k=k, query_id=query_id, data_id=data_id, qid_type=qid_type,
-        round_decimals=round_decimals, exclude_self=exclude_self,
-        warn_ctx=f"hex res={res} ring={ring} k={k} target_m={target_m:.0f}",
-    )
 
 
 # ----------------------------------------------------- E4: raster↔vector ---

@@ -33,9 +33,6 @@ def main() -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
     from gotrackmaster_spark import driver_queries as Q
-    from gotrackmaster_spark.functions.cells import cell_col
-    from gotrackmaster_spark.functions.tiles import tile_name_col
-    from gotrackmaster_spark.operators.spatial import point_in_polygon_join
     from gotrackmaster_spark.plans.checkpoint import Catalog
 
     cat = Catalog(args.checkpoint_root)
@@ -51,13 +48,7 @@ def main() -> None:
 
     pts = Q.geo_events(spark, args.sf_dir).select("event_id", "user_id", "lat", "lon")
     polys_pending = polys.join(F.broadcast(pending), "poly_id", "left_semi")
-    hits = point_in_polygon_join(pts, polys_pending, level=7)
-    out = (
-        hits.withColumn("tile", tile_name_col(F.col("lat"), F.col("lon"), 1.0))
-        .withColumn("cell5", F.shiftright(cell_col(F.col("lat"), F.col("lon"), 12), 14))
-        .groupBy("poly_id", "tile")
-        .agg(F.count("*").alias("n_points"), F.countDistinct("cell5").alias("n_cells"))
-    )
+    out = Q.flagship_tiles(pts, polys_pending).drop("n_tracks")
     attempted = [r.poly_id for r in pending.collect()]
     manifest = cat.commit(
         out, args.table, partition_col="poly_id", attempted_partitions=attempted

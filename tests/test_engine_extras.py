@@ -5,6 +5,7 @@ from __future__ import annotations
 import sys
 
 import numpy as np
+import pytest
 
 sys.path.insert(0, "/root/repo")
 
@@ -384,7 +385,7 @@ def test_catalog_compact(spark, tmp_path):
 
 def test_knn_join_shuffle_query_variant(spark):
     """broadcast_queries=False must return the identical kNN result with a
-    shuffle-hash candidate join."""
+    sort-merge candidate join."""
     from gotrackmaster_spark.driver_queries import geo_events
     from gotrackmaster_spark.operators.spatial import knn_join
 
@@ -403,13 +404,14 @@ def test_knn_join_shuffle_query_variant(spark):
     ra = {(r.query_id, r.rank): r.data_id for r in a.collect()}
     rb = {(r.query_id, r.rank): r.data_id for r in b.collect()}
     assert ra == rb and len(ra) > 0
+    assert "SortMergeJoin" in b._jdf.queryExecution().executedPlan().toString()
 
 
 def test_hex_knn_join_matches_square(spark):
     """hex k-ring kNN (sort-merge refinement) must equal the square-grid
     kNN — both carry the exactness guarantee, so they agree rank-for-rank."""
     from gotrackmaster_spark.driver_queries import geo_events
-    from gotrackmaster_spark.operators.spatial import hex_knn_join, knn_join
+    from gotrackmaster_spark.operators.spatial import knn_join
 
     pts = geo_events(spark, "/root/testdata/sf0.001").select(
         "event_id", "lat", "lon"
@@ -419,7 +421,7 @@ def test_hex_knn_join_matches_square(spark):
     )
     d = pts.withColumnRenamed("event_id", "data_id")
     a = knn_join(qs, d, k=3, level=6, ring=1, exclude_self=False, n_data=1000)
-    b = hex_knn_join(qs, d, k=3, res=3, ring=1, exclude_self=False, n_data=1000)
+    b = knn_join(qs, d, k=3, level=3, ring=1, exclude_self=False, n_data=1000, grid="hex")
     ra = {(r.query_id, r.rank): r.data_id for r in a.collect()}
     rb = {(r.query_id, r.rank): r.data_id for r in b.collect()}
     assert ra == rb and len(ra) > 0
@@ -432,7 +434,7 @@ def test_hex_knn_seam_and_pole_exact(spark):
     import numpy as np
 
     from gotrackmaster_spark.functions.geodesy import haversine_np
-    from gotrackmaster_spark.operators.spatial import hex_knn_join
+    from gotrackmaster_spark.operators.spatial import knn_join
 
     rng = np.random.default_rng(7)
     n = 400
@@ -446,7 +448,7 @@ def test_hex_knn_seam_and_pole_exact(spark):
         [(i, la, lo) for i, la, lo in rows[:60]],
         "query_id int, lat double, lon double",
     )
-    out = hex_knn_join(q, d, k=3, res=3, ring=1, exclude_self=True, n_data=n)
+    out = knn_join(q, d, k=3, level=3, ring=1, exclude_self=True, n_data=n, grid="hex")
     got = {(r.query_id, r.rank): r.data_id for r in out.collect()}
     assert len(got) == 60 * 3
     for qi in range(60):
@@ -466,7 +468,7 @@ def test_hex_knn_plan_is_sort_merge(spark):
     refinement') with no CartesianProduct; the only nested-loop operator
     allowed is the broadcast-gated brute-force fallback branch."""
     from gotrackmaster_spark.driver_queries import geo_events
-    from gotrackmaster_spark.operators.spatial import hex_knn_join
+    from gotrackmaster_spark.operators.spatial import knn_join
 
     pts = geo_events(spark, "/root/testdata/sf0.001").select(
         "event_id", "lat", "lon"
@@ -475,9 +477,31 @@ def test_hex_knn_plan_is_sort_merge(spark):
         "event_id", "query_id"
     )
     d = pts.withColumnRenamed("event_id", "data_id")
-    out = hex_knn_join(qs, d, k=3, res=3, ring=1, exclude_self=False, n_data=1000)
+    out = knn_join(qs, d, k=3, level=3, ring=1, exclude_self=False, n_data=1000,
+                   grid="hex", broadcast_queries=False)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" in plan
+    assert "CartesianProduct" not in plan
+
+
+def test_knn_plan_is_broadcast(spark):
+    """The default (Z-order) kNN broadcasts the exploded query rings: its
+    candidate join on the cell key is a BroadcastHashJoin."""
+    import re
+
+    from gotrackmaster_spark.operators.spatial import knn_join
+
+    rng = np.random.default_rng(3)
+    rows = [
+        (i, float(la), float(lo))
+        for i, (la, lo) in enumerate(zip(rng.uniform(-60, 60, 500), rng.uniform(-180, 180, 500)))
+    ]
+    d = spark.createDataFrame(rows, "data_id int, lat double, lon double")
+    qs = spark.createDataFrame(rows[::50], "query_id int, lat double, lon double")
+    out = knn_join(qs, d, k=3, level=6, ring=1, exclude_self=False, n_data=500)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    joins = set(re.findall(r"(\w+Join) \[cell#\d+L?\], \[cell#\d+L?\]", plan))
+    assert joins == {"BroadcastHashJoin"}, plan
     assert "CartesianProduct" not in plan
 
 
@@ -486,16 +510,18 @@ def test_knn_isolated_query_not_dropped(spark):
     still get its k neighbours via the brute-force phase — not vanish
     from the output (regression: the short-query gate was derived from
     the candidate set, which has no row for such queries)."""
-    from gotrackmaster_spark.operators.spatial import hex_knn_join, knn_join
+    from gotrackmaster_spark.operators.spatial import knn_join
 
     d = spark.createDataFrame(
         [(1, 10.0, 10.0), (2, 50.0, 120.0), (3, 50.1, 120.1)],
         "data_id int, lat double, lon double",
     )
     q = spark.createDataFrame([(1, 10.0, 10.0)], "query_id int, lat double, lon double")
-    for fn, kw in ((knn_join, {"level": 6, "ring": 1}), (hex_knn_join, {"res": 3, "ring": 1})):
-        rows = fn(q, d, k=1, exclude_self=True, n_data=3, **kw).collect()
-        assert len(rows) == 1 and rows[0]["data_id"] == 2, (fn.__name__, rows)
+    for grid, level in (("z", 6), ("hex", 3)):
+        rows = knn_join(
+            q, d, k=1, level=level, ring=1, exclude_self=True, n_data=3, grid=grid
+        ).collect()
+        assert len(rows) == 1 and rows[0]["data_id"] == 2, (grid, rows)
 
 
 def test_pip_join_grid_equivalence(spark):
@@ -507,8 +533,8 @@ def test_pip_join_grid_equivalence(spark):
 
     from gotrackmaster_spark.driver_queries import geo_events, rect_polygons
     from gotrackmaster_spark.operators.spatial import (
-        hex_polygon_covering,
         point_in_polygon_join,
+        polygon_covering,
     )
 
     pts = geo_events(spark, "/root/testdata/sf0.001").select(
@@ -524,9 +550,75 @@ def test_pip_join_grid_equivalence(spark):
         for r in point_in_polygon_join(pts, polys, level=4, grid="hex").collect()
     )
     assert a == b and len(a) > 0
-    cov = hex_polygon_covering(polys, 4)
+    cov = polygon_covering(polys, 4, grid="hex")
     n_full = cov.filter(F.col("full")).count()
     assert n_full > 0, "hex polyfill produced no full cells at res 4"
+
+
+# A concave 10-point star around (10°, 20°), radii 12° and 5°: full cells in
+# its core, boundary cells along its notches.
+_STAR_RING = [
+    (10.0, 32.0), (12.938926, 24.045085), (21.412678, 23.708204),
+    (14.755283, 18.454915), (17.053423, 10.291796), (10.0, 15.0),
+    (2.946577, 10.291796), (5.244717, 18.454915), (-1.412678, 23.708204),
+    (7.061074, 24.045085),
+]
+
+
+@pytest.mark.parametrize(
+    "level,grid,n_rows,n_full,digest",
+    [
+        (4, "z", 55, 0, "7972dd18435fd21e26fb0544952b74c340157bdde2945f5678c6d651de5fe607"),
+        (7, "z", 559, 107, "bd465fb31fb36a5a5f681c3535bfc3b41f76d067533df69f17eb53570a3a33a1"),
+        (4, "hex", 577, 87, "fd842b5d34248d298cbe7db25ca1cdf9fedb907ecea59e9b83adb53c47e12274"),
+    ],
+)
+def test_polygon_covering_golden(spark, tmp_path, level, grid, n_rows, n_full, digest):
+    """Row-for-row pin of the covering (``cell``, ``poly_id``, ``full``) on
+    the rect polygons of the 25 nation keys plus a concave star: the
+    SHA-256 of the sorted rows as JSON, with the row and full-cell counts
+    for a readable failure."""
+    import hashlib
+    import json
+
+    from gotrackmaster_spark.driver_queries import rect_polygons
+    from gotrackmaster_spark.operators.spatial import polygon_covering
+    from gotrackmaster_spark.session import local_frame
+
+    spark.range(25).withColumnRenamed("id", "n_nationkey").write.parquet(
+        str(tmp_path / "nation.parquet")
+    )
+    polys = rect_polygons(spark, str(tmp_path)).unionByName(
+        local_frame(
+            spark, [("star", _STAR_RING)],
+            "poly_id string, ring array<struct<lat:double,lon:double>>",
+        )
+    )
+    rows = sorted(
+        [r.cell, r.poly_id, bool(r.full)]
+        for r in polygon_covering(polys, level, grid=grid).collect()
+    )
+    assert (len(rows), sum(f for _, _, f in rows)) == (n_rows, n_full)
+    assert hashlib.sha256(json.dumps(rows).encode()).hexdigest() == digest
+
+
+@pytest.mark.parametrize("op", ["polygon_covering", "point_in_polygon_join", "knn_join"])
+def test_unknown_grid_raises(spark, op):
+    """Every grid-taking operator rejects an unknown lattice name."""
+    from gotrackmaster_spark.operators import spatial
+
+    polys = spark.createDataFrame(
+        [("a", [(0.0, 0.0), (0.0, 1.0), (1.0, 1.0)])],
+        "poly_id string, ring array<struct<lat:double,lon:double>>",
+    )
+    pts = spark.createDataFrame([(1, 0.5, 0.5)], "query_id int, lat double, lon double")
+    args = {
+        "polygon_covering": (polys, 4),
+        "point_in_polygon_join": (pts, polys, 4),
+        "knn_join": (pts, pts.withColumnRenamed("query_id", "data_id"), 1, 4),
+    }[op]
+    with pytest.raises(ValueError, match="grid must be"):
+        getattr(spatial, op)(*args, grid="s2")
 
 
 def test_kmv_distinct_partition_invariant_and_accurate(spark):
@@ -605,14 +697,13 @@ def test_gpx_scan_quarantine(spark, tmp_path):
     import shutil
 
     from gotrackmaster_spark.sources.gpx import gpx_scan_distributed
+    from tests.conftest import FIXTURES
 
     src = str(tmp_path / "gpx")
     import os
 
     os.makedirs(src)
-    shutil.copy(
-        "/root/reference/testdata/2020-10-03_09-05_Sat_pedraforca.gpx", src
-    )
+    shutil.copy(FIXTURES["pedraforca"], src)
     with open(f"{src}/broken.gpx", "w") as f:
         f.write("<gpx><trk><unclosed></gpx>")
 

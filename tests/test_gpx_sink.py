@@ -6,7 +6,7 @@ import sys
 
 sys.path.insert(0, "/root/repo")
 
-from tests.conftest import FIXTURES  # noqa: E402
+from tests.conftest import FIXTURE_DIR, FIXTURES  # noqa: E402
 
 
 def test_gpx_roundtrip_lossless(spark, tmp_path):
@@ -34,7 +34,7 @@ def test_gpx_roundtrip_lossless(spark, tmp_path):
 def test_discover_gpx_files():
     from gotrackmaster_spark.sources.gpx import discover_gpx_files
 
-    found = discover_gpx_files("/root/reference/testdata")
+    found = discover_gpx_files(FIXTURE_DIR)
     assert len(found) == 4
     assert all(f.endswith(".gpx") for f in found)
     assert found == sorted(found)
@@ -79,7 +79,7 @@ def test_distributed_scan_matches_driver_etl(spark):
         scan_waypoints,
     )
 
-    root = "/root/reference/testdata"
+    root = FIXTURE_DIR
     d_pts, d_trk, d_wpt = gpx_files_to_tables(spark, discover_gpx_files(root))
     scan = gpx_scan_distributed(spark, root).cache()
 
